@@ -118,7 +118,10 @@ object Bench {
     // SparkContext/conf — not from the env — so the record proves the
     // env was honored, not merely requested
     val cpusLive = spark.sparkContext.defaultParallelism
-    val shufLive = spark.conf.get("spark.sql.shuffle.partitions")
+    // a number when the live value parses as one, else a quoted string
+    // — a non-numeric conf value must never make the record unparseable
+    val shufRaw = spark.conf.get("spark.sql.shuffle.partitions")
+    val shufLive = shufRaw.trim.toLongOption.fold(Verify.jsonStr(shufRaw))(_.toString)
     val scaleEcho =
       s""""cpus":$cpusLive,"shuffle_partitions":$shufLive,"master":"${spark.sparkContext.master}""""
     val full =

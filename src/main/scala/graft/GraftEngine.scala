@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 
@@ -14,6 +15,14 @@ import graft.streaming.{CdcStream, DeltaCdc}
   * per-entity search indices) plus the engine's analytics extensions
   * (relational surface, dedup, similarity search, text analysis), in
   * one place.
+  *
+  * The facade methods are the oracle-gated implementations: where a
+  * registry query covers a capability (term/phrase suggest,
+  * more_like_this, search_after, span_near, geo grid, stratified
+  * sample, bigram LM, DSIR, quality classifier), the query calls the
+  * facade method and adds only its projection and final order/limit,
+  * so the code users run is the code the DuckDB oracle and the plan
+  * pins check.
   *
   * {{{
   * val g = GraftEngine(spark)
@@ -190,23 +199,38 @@ final case class GraftEngine(spark: SparkSession) {
     * bigram LM, in exact integer micro-nats — the KenLM-perplexity-
     * filter shape (low avg log-prob = gibberish / boilerplate).
     * Bigrams derive map-side from each doc's token array (no
-    * self-join); the shuffled state is the bigram/context count
-    * tables, bounded by vocabulary, not the corpus.
+    * self-join); the shuffled state is one bigram count table, bounded
+    * by vocabulary², not the corpus.
     */
   def bigramLogProb(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     val arr = TextFns.tokens(col(textCol))
-    val bg = docs.select(col(idCol),
-        explode(transform(F.slice(arr, lit(1), F.size(arr) - 1),
-          (x, i) => struct(x.as("w1"),
-            concat(x, lit(" "), element_at(arr, i + 2)).as("b")))).as("p"))
-      .select(col(idCol), col("p.w1").as("w1"), col("p.b").as("b"))
+    // adjacent pairs by position over ONE array — map-side, order
+    // kept. posexplode + element_at instead of a two-arg transform
+    // lambda: NamedLambdaVariable ids defeat plan canonicalization,
+    // so with the lambda form the bigram subtree's exchange was
+    // computed once per consumer (no AQE stage reuse — measured,
+    // distinct ShuffleQueryStage ids); lambda-free, the consumers
+    // share one stage.
+    val bg = docs.select(col(idCol), arr.as("a"))
+      .select(col(idCol), col("a"),
+        posexplode(F.slice(col("a"), lit(1), F.size(col("a")) - 1)).as(Seq("i", "w1")))
+      .select(col(idCol), col("w1"),
+        concat(col("w1"), lit(" "), element_at(col("a"), col("i") + 2)).as("b"))
+    // ONE vocab²-bounded count table carrying BOTH statistics:
+    // n_ctx(w1) = Σ n_b over bigrams sharing the context (tokens are
+    // space-split, so w1 is exactly the prefix before the first
+    // space) — a window over the count table itself. The corpus is
+    // exploded once per side (big-side join + count partials), the
+    // enrichment is vocab-bounded work, and the hot path pays ONE
+    // broadcast hash join, not one per statistic.
     val cb = bg.groupBy(col("b")).agg(count(lit(1)).as("n_b"))
-    val cw = bg.groupBy(col("w1")).agg(count(lit(1)).as("n_ctx"))
+      .withColumn("n_ctx", sum(col("n_b")).over(
+        Window.partitionBy(substring_index(col("b"), " ", 1))))
     val v = docs.select(explode(arr).as("t")).agg(countDistinct(col("t")).as("v"))
-    // count tables are vocab-bounded — pinned build sides; the static
-    // size estimate (parquet bytes, blind to explode fan-out) would
-    // otherwise happily broadcast the corpus-sized bigram stream
-    bg.join(broadcast(cb), "b").join(broadcast(cw), "w1").crossJoin(broadcast(v))
+    // count tables are vocab-/vocab²-bounded — pinned build sides; the
+    // static size estimate (parquet bytes, blind to explode fan-out)
+    // would otherwise happily broadcast the corpus-sized bigram stream
+    bg.join(broadcast(cb), "b").crossJoin(broadcast(v))
       .select(col(idCol),
         round(log((col("n_b") + lit(1)).cast("double") /
           (col("n_ctx") + col("v")).cast("double")) * 1e6).cast("long").as("mn"))
@@ -220,7 +244,10 @@ final case class GraftEngine(spark: SparkSession) {
     * TARGET unigram distribution vs the full corpus, Laplace-smoothed,
     * in micro-nats. `targetPred` marks the target slice (e.g.
     * `col("lang") === "en"`). Positive weight = looks more like the
-    * target than the background.
+    * target than the background. One groupBy carries BOTH
+    * distributions (the target count rides along as a conditional
+    * sum), totals broadcast — two shuffles, independent of corpus size
+    * beyond the token stream itself.
     */
   def dsirWeights(docs: DataFrame, idCol: String, textCol: String,
       targetPred: Column): DataFrame = {
@@ -229,10 +256,15 @@ final case class GraftEngine(spark: SparkSession) {
     val cnt = toks.groupBy(col("t")).agg(
       count(lit(1)).as("n_src"),
       sum(when(col("_tgt"), 1L).otherwise(0L)).as("n_tgt"))
-    val tot = toks.agg(
-      count(lit(1)).as("tot_src"),
-      sum(when(col("_tgt"), 1L).otherwise(0L)).as("tot_tgt"),
-      countDistinct(col("t")).as("v"))
+    // totals fold out of the per-token count table (vocab-bounded):
+    // Σ n_src = token-stream length, Σ n_tgt = target-stream length,
+    // row count = |vocab| — never a second tokenize+explode pass
+    val tot = cnt.agg(
+      sum(col("n_src")).as("tot_src"),
+      sum(col("n_tgt")).as("tot_tgt"),
+      count(lit(1)).as("v"))
+    // vocabulary-bounded build side pinned: the static estimate would
+    // happily broadcast the token stream
     toks.join(broadcast(cnt), "t").crossJoin(broadcast(tot))
       .select(col(idCol),
         round((log((col("n_tgt") + lit(1)).cast("double") /
@@ -246,9 +278,11 @@ final case class GraftEngine(spark: SparkSession) {
 
   /** Hashed linear quality classifier: a pretrained bag-of-words model
     * whose per-token weight derives from a portable md5 hash (milli
-    * units) — the model ships as an expression, so scoring is a pure
-    * map with ONE shuffle (the per-doc aggregate) at any corpus size.
-    * Swap `weightOf` to load real trained weights.
+    * units in [-1000, 1000]) — the model ships as an expression (no
+    * join, no broadcast, and both engines score bit-identically in
+    * integers), so scoring is a pure map with ONE shuffle (the per-doc
+    * aggregate) at any corpus size. Swap `weightOf` to load real
+    * trained weights.
     */
   def qualityClassifier(docs: DataFrame, idCol: String, textCol: String,
       weightOf: Column => Column = t =>
@@ -516,7 +550,6 @@ final case class GraftEngine(spark: SparkSession) {
     */
   def termSuggest(docs: DataFrame, textCol: String, inputs: Seq[String],
       maxEdits: Int = 2, size: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vocab = docs.select(explode(array_distinct(
         graft.functions.TextFns.tokens(col(textCol)))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("freq"))
@@ -567,7 +600,6 @@ final case class GraftEngine(spark: SparkSession) {
     */
   def phraseSuggest(docs: DataFrame, textCol: String, phrase: Seq[String],
       maxEdits: Int = 1, perPosition: Int = 5, size: Int = 5): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(phrase.size >= 2, "phrase suggester needs at least two words")
     // the candidate expansion is perPosition^positions rows and flows
     // through a single-partition rank window — request-side by design,
@@ -682,14 +714,8 @@ final case class GraftEngine(spark: SparkSession) {
   def geoGrid(points: DataFrame, latCol: String, lonCol: String,
       latQ: Double, lonQ: Double, radiusKm: Double,
       cellDeg: Double = 15.0): DataFrame = {
-    val pi = lit(math.Pi)
-    val sdlat = sin((col(latCol) - lit(latQ)) * pi / lit(180.0) / lit(2.0))
-    val sdlon = sin((col(lonCol) - lit(lonQ)) * pi / lit(180.0) / lit(2.0))
-    val dist = round(
-      lit(12742.0176) * asin(sqrt(
-        sdlat * sdlat +
-          cos(lit(latQ) * pi / lit(180.0)) * cos(col(latCol) * pi / lit(180.0)) *
-            sdlon * sdlon)), 6)
+    val dist = graft.search.QueryDsl.haversineKmCols(col(latCol), col(lonCol),
+      latQ, lonQ)
     points.withColumn("dist_km", dist)
       .filter(col("dist_km") <= lit(radiusKm))
       .groupBy(floor(col(latCol) / lit(cellDeg)).as("cell_lat"),

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -20,21 +21,29 @@ object ScanCount {
     args.foreach { n =>
       val df = Registry.byName(n).run(spark, sfDir)
       df.queryExecution.toRdd.foreach(_ => ())
-      val root = df.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      def flatten(p: SparkPlan): Seq[SparkPlan] =
-        p +: (p.children.flatMap(flatten) ++ (p match {
-          case q: QueryStageExec => flatten(q.plan)
-          case r: ReusedExchangeExec => flatten(r.child)
-          case _ => Nil
-        }))
-      val scans = flatten(root).collect { case f: FileSourceScanExec => f }
-      val byAcc = scans.map(f => f.metrics("numOutputRows").id -> f).toMap
-      val rows = byAcc.values.map(_.metrics("numOutputRows").value).sum
-      println(s"[scancount] $n distinct_scans=${byAcc.size} scan_rows=$rows")
+      val scans = distinctScans(df)
+      val rows = scans.map(_.metrics("numOutputRows").value).sum
+      println(s"[scancount] $n distinct_scans=${scans.size} scan_rows=$rows")
     }
     spark.stop()
+  }
+
+  /** The distinct scans of an EXECUTED query's final plan, one per
+    * `numOutputRows` accumulator id — descending through AQE query
+    * stages and reused exchanges, so a shared stage counts once.
+    */
+  def distinctScans(df: DataFrame): Seq[FileSourceScanExec] = {
+    val root = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    def flatten(p: SparkPlan): Seq[SparkPlan] =
+      p +: (p.children.flatMap(flatten) ++ (p match {
+        case q: QueryStageExec => flatten(q.plan)
+        case r: ReusedExchangeExec => flatten(r.child)
+        case _ => Nil
+      }))
+    flatten(root).collect { case f: FileSourceScanExec => f }
+      .map(f => f.metrics("numOutputRows").id -> f).toMap.values.toSeq
   }
 }

@@ -11,11 +11,13 @@ import org.apache.spark.storage.StorageLevel
   * canonical representative per cluster, everything else dropped).
   *
   * Min-label propagation with the pointer jump folded into the push:
-  * every node starts labeled with its own id; each round pushes labels
-  * across the graph edges PLUS the current label edges (label(X) → X)
-  * PLUS a self edge, and keeps the minimum. The label edges are the
-  * pointer jump — X receives label(label(X)) in the same round that
-  * pushes neighbor labels — so remaining chain depth still halves per
+  * every node starts labeled with min(its own id, its neighbors' ids)
+  * — the first identity-start push, folded into the init pass; each
+  * round then pushes labels across the graph edges PLUS the current
+  * label edges (label(X) → X) PLUS a self edge, and keeps the minimum.
+  * The label edges are the pointer jump — X receives label(label(X))
+  * in the same round that pushes neighbor labels — so remaining chain
+  * depth still halves per
   * round (O(log diameter) convergence), and any fixed point of the
   * push is the true component labeling (at a fixed point labels are
   * constant across each edge, and every label is a component-member

@@ -478,57 +478,15 @@ object Curation {
 
     // Bigram-LM scoring (the KenLM-perplexity-filter shape, one order
     // up from q105's unigram): corpus-trained add-one-smoothed bigram
-    // model, per-doc mean log-prob in exact integer micro-nats.
-    // Plan: bigrams derive map-side from the token array (no
-    // self-join), then two count tables keyed by bigram / context —
-    // postings-style equi-joins, a bigram in d docs costs d rows,
-    // never d². At 100 TB the count tables are the shuffled state
-    // (vocab², bounded), not the corpus.
+    // model, per-doc mean log-prob in exact integer micro-nats. The
+    // plan (one vocab²-bounded count table, broadcast) lives in the
+    // facade method this query runs.
     GraftQuery(
       "q154_bigram_logprob",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val arr = TextFns.tokens(col("text"))
-        // adjacent pairs by position over ONE array — map-side, order
-        // kept. posexplode + element_at instead of a two-arg transform
-        // lambda: NamedLambdaVariable ids defeat plan canonicalization,
-        // so with the lambda form the bigram subtree's exchange was
-        // computed once per consumer (no AQE stage reuse — measured,
-        // distinct ShuffleQueryStage ids); lambda-free, the consumers
-        // share one stage (r16 opt).
-        val bg = d.select(col("doc_id"), arr.as("a"))
-          .select(col("doc_id"), col("a"),
-            posexplode(slice(col("a"), lit(1), size(col("a")) - 1)).as(Seq("i", "w1")))
-          .select(col("doc_id"), col("w1"),
-            concat(col("w1"), lit(" "), element_at(col("a"), col("i") + 2)).as("b"))
-        // ONE vocab²-bounded count table carrying BOTH statistics:
-        // n_ctx(w1) = Σ n_b over bigrams sharing the context (tokens
-        // are space-split, so w1 is exactly the prefix before the
-        // first space) — a window over the count table itself. The old
-        // shape aggregated the corpus bigram stream twice more (cw ran
-        // the whole tokenize+explode again, and the two broadcast
-        // tables were separate joins); now the corpus is exploded once
-        // per side (big-side join + count partials), the enrichment is
-        // vocab-bounded work, and the hot path pays ONE broadcast hash
-        // join instead of two (r16 opt: probe 3.4 → 0.8 s at sf0.1).
-        val cb = bg.groupBy(col("b")).agg(count(lit(1)).as("n_b"))
-          .withColumn("n_ctx", sum(col("n_b")).over(
-            Window.partitionBy(substring_index(col("b"), " ", 1))))
-        val v = d.select(explode(arr).as("t"))
-          .agg(countDistinct(col("t")).as("v"))
-        // count tables are vocab-/vocab²-bounded — pinned as build
-        // sides (see q105's note on the static-estimate trap)
-        bg.join(broadcast(cb), "b")
-          .crossJoin(broadcast(v))
-          .select(col("doc_id"),
-            round(log((col("n_b") + lit(1)).cast("double") /
-              (col("n_ctx") + col("v")).cast("double")) * 1e6)
-              .cast("long").as("mn"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_big"), sum(col("mn")).as("sum_micronats"))
-          .withColumn("avg_micronats", expr("sum_micronats div n_big"))
-          .orderBy(col("doc_id"))
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .bigramLogProb(Tables.load(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("doc_id")),
       Some("""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
         idx AS (SELECT doc_id, a, unnest(range(1, len(a))) AS i FROM toks),
@@ -553,43 +511,17 @@ object Curation {
     // DSIR-style importance weighting (Xie et al.: data selection by
     // importance resampling): per-token log-ratio of a TARGET unigram
     // distribution (here: the English slice) to the SOURCE (whole
-    // corpus), Laplace-smoothed, summed per doc in micro-nats. One
-    // groupBy carries BOTH distributions (target count rides along as
-    // a conditional sum), totals broadcast — two shuffles total,
-    // independent of corpus size beyond the token stream itself.
+    // corpus), Laplace-smoothed, summed per doc in micro-nats, plus a
+    // keep flag for positive weights.
     GraftQuery(
       "q155_dsir_weights",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val toks = d.select(col("doc_id"), col("lang"),
-          explode(TextFns.tokens(col("text"))).as("t"))
-        val cnt = toks.groupBy(col("t")).agg(
-          count(lit(1)).as("n_src"),
-          sum(when(col("lang") === "en", 1L).otherwise(0L)).as("n_tgt"))
-        // totals fold out of the per-token count table (vocab-bounded):
-        // Σ n_src = token-stream length, Σ n_tgt = target-stream
-        // length, row count = |vocab| — the old global agg re-ran the
-        // whole tokenize+explode a second time (r16 opt).
-        val tot = cnt.agg(
-          sum(col("n_src")).as("tot_src"),
-          sum(col("n_tgt")).as("tot_tgt"),
-          count(lit(1)).as("v"))
-        // vocabulary-bounded build side pinned (see q105's note): the
-        // static estimate would happily broadcast the token stream
-        toks.join(broadcast(cnt), "t")
-          .crossJoin(broadcast(tot))
-          .select(col("doc_id"),
-            round((log((col("n_tgt") + lit(1)).cast("double") /
-                       (col("tot_tgt") + col("v")).cast("double")) -
-                   log((col("n_src") + lit(1)).cast("double") /
-                       (col("tot_src") + col("v")).cast("double"))) * 1e6)
-              .cast("long").as("mn"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_tok"), sum(col("mn")).as("weight_micronats"))
-          .withColumn("keep",
-            when(col("weight_micronats") > 0L, 1L).otherwise(0L))
-          .orderBy(col("doc_id"))
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .dsirWeights(Tables.load(s, dir, "documents"), "doc_id", "text",
+          col("lang") === "en")
+        .select(col("doc_id"), col("n_tok"), col("weight_micronats"),
+          when(col("weight_micronats") > 0L, 1L).otherwise(0L).as("keep"))
+        .orderBy(col("doc_id")),
       Some("""
         WITH toks AS (
           SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t FROM documents),
@@ -615,25 +547,15 @@ object Curation {
       """.stripMargin.trim)),
 
     // Hashed linear quality classifier (the fastText-style scoring
-    // pass every production curation stack runs): apply a pretrained
-    // bag-of-words model whose weight for a token is DERIVED from a
-    // portable hash (md5-based, milli-units in [-1000, 1000]) — so the
-    // "model" ships as an expression, no join, no broadcast, and both
-    // engines score bit-identically in integers. Map-only until the
-    // per-doc aggregate: ONE shuffle at any corpus size.
+    // pass every production curation stack runs) with the facade's
+    // default md5-derived token weights. Map-only until the per-doc
+    // aggregate: ONE shuffle at any corpus size.
     GraftQuery(
       "q156_quality_classifier",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val toks = d.select(col("doc_id"),
-          explode(TextFns.tokens(col("text"))).as("t"))
-        val w = TextFns.md5hash60(concat(lit("w:"), col("t"))) % 2001L - 1000L
-        toks.select(col("doc_id"), w.as("w_milli"))
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_tok"), sum(col("w_milli")).as("logit_milli"))
-          .withColumn("label", when(col("logit_milli") > 0L, 1L).otherwise(0L))
-          .orderBy(col("doc_id"))
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .qualityClassifier(Tables.load(s, dir, "documents"), "doc_id", "text")
+        .orderBy(col("doc_id")),
       Some("""
         WITH toks AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),

@@ -1,10 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{Encoders, functions => F}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.GraftQuery
-import graft.functions.{Aggregators, TextFns}
+import graft.functions.TextFns
 import graft.sources.Tables
 
 /** Sampling operators for training-data curation — the "how much of
@@ -37,20 +36,11 @@ object Sampling {
     // bounded-heap aggregate is the scale path (see object scaladoc).
     GraftQuery(
       "q81_sample_stratified",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val topk = F.udaf(new Aggregators.SmallestKByKey(K),
-          Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
-        d.select(col("source"),
-            TextFns.md5hash60(concat(lit("sample:"), col("doc_id").cast("string"))).as("hk"),
-            col("doc_id"))
-          .groupBy(col("source"))
-          .agg(topk(col("hk"), col("doc_id")).as("picks"))
-          .select(col("source"), posexplode(col("picks")))
-          .select(col("source"), (col("pos") + 1).cast("long").as("rank"),
-            col("col._2").as("doc_id"))
-          .orderBy(col("source"), col("rank"))
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .stratifiedSample(Tables.load(s, dir, "documents"), "source", "doc_id", K)
+        .select(col("stratum").as("source"), col("rank"), col("doc_id"))
+        .orderBy(col("source"), col("rank")),
       Some(s"""
         WITH h AS (
           SELECT source, doc_id,

@@ -1071,57 +1071,17 @@ object Search {
     // term) — and whole-phrase corrections are re-ranked by corpus
     // evidence: the bigram count of the corrected pair, the
     // OpenSearch `collate`/LM idea with an exact integer score.
-    // Scale shape: the vocabulary and bigram tables are the two
-    // corpus-sized shuffles (same cost class as q117's vocab); the
-    // suggest request itself stays tiny end-to-end — inputs broadcast
-    // into the length band, candidate pairs capped at 5×5=25, the
-    // bigram table probed by an inner join against the broadcast
-    // pairs, and the final left join + rank window touch ≤25 rows.
     GraftQuery(
       "q121_search_phrase_suggest",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val vocab = d.select(
-            explode(array_distinct(TextFns.tokens(col("text")))).as("term"))
-          .groupBy(col("term")).agg(count(lit(1)).as("freq"))
-        val inputs = s.range(1).select(explode(array(
-            struct(lit(1L).as("pos"), lit("park").as("q")),
-            struct(lit(2L).as("pos"), lit("low").as("q")))).as("in"))
-          .select(col("in.pos").as("pos"), col("in.q").as("q"))
-        val cand = vocab.join(broadcast(inputs),
-            abs(length(col("term")) - length(col("q"))) <= 1 &&
-              levenshtein(col("q"), col("term")) <= 1)
-          .select(col("pos"), col("term"),
-            levenshtein(col("q"), col("term")).cast("long").as("dist"),
-            col("freq"))
-        val wPos = Window.partitionBy(col("pos"))
-          .orderBy(col("dist"), col("freq").desc, col("term"))
-        val top = cand.withColumn("r", row_number().over(wPos))
-          .filter(col("r") <= 5)
-        val pairs = top.filter(col("pos") === 1)
-          .select(col("term").as("w1"), col("dist").as("d1"))
-          .crossJoin(top.filter(col("pos") === 2)
-            .select(col("term").as("w2"), col("dist").as("d2")))
-        val bigrams = d.select(TextFns.tokens(col("text")).as("tok"))
-          .filter(size(col("tok")) >= 2)
-          .select(explode(TextFns.adjacentPairs(col("tok"))).as("p"))
-          .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
-          .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("bcount"))
-        // corpus-sized bigram table probed by the 25 broadcast pairs;
-        // the surviving rows (≤25) broadcast back into the left join
-        val hit = bigrams.join(broadcast(pairs.select(col("w1"), col("w2"))),
-          Seq("w1", "w2"))
-        val scored = pairs.join(broadcast(hit), Seq("w1", "w2"), "left")
-          .withColumn("bcount", coalesce(col("bcount"), lit(0L)))
-          .withColumn("dist", col("d1") + col("d2"))
-        // ≤25 rows: the single-partition rank window is bounded
-        val wAll = Window.orderBy(
-          col("bcount").desc, col("dist"), col("w1"), col("w2"))
-        scored.withColumn("rank", row_number().over(wAll).cast("long"))
-          .filter(col("rank") <= 5)
-          .select(col("rank"), col("w1"), col("w2"), col("bcount"), col("dist"))
-          .orderBy(col("rank"))
-      },
+      // the facade pipeline IS the gated implementation (see q117); for
+      // two positions the score is the single pair's bigram count, and
+      // ordering by the word array sorts as ordering by (w1, w2) does
+      (s, dir) => graft.GraftEngine(s)
+        .phraseSuggest(Tables.load(s, dir, "documents"), "text",
+          Seq("park", "low"), maxEdits = 1, perPosition = 5, size = 5)
+        .select(col("rank"), col("words")(0).as("w1"), col("words")(1).as("w2"),
+          col("score").as("bcount"), col("dist"))
+        .orderBy(col("rank")),
       Some("""
         WITH v AS (
           SELECT tok AS term, COUNT(*) AS freq
@@ -1170,14 +1130,11 @@ object Search {
     // reads the same number of rows as page 1.
     GraftQuery(
       "q123_search_search_after",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        d.filter(col("n_chars") < 300 ||
-            (col("n_chars") === 300 && col("doc_id") > 250))
-          .orderBy(col("n_chars").desc, col("doc_id"))
-          .limit(10)
-          .select(col("doc_id"), col("n_chars"), col("lang"))
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .searchAfter(Tables.load(s, dir, "documents"), "n_chars", "doc_id",
+          after = (300L, 250L), pageSize = 10)
+        .select(col("doc_id"), col("n_chars"), col("lang")),
       Some("""
         SELECT doc_id, n_chars, lang FROM documents
         WHERE n_chars < 300 OR (n_chars = 300 AND doc_id > 250)
@@ -1234,29 +1191,18 @@ object Search {
     // the transcendental chain (sin/cos/asin over IEEE doubles) is
     // written with the IDENTICAL operation order in both engines and
     // the result rounded to 6 dp before any compare/filter — the
-    // established ln/exp recipe. Scale shape: map-only derive +
-    // filter, then ONE grid-keyed agg; cells are bounded by the
-    // geometry (≤288 here), so the shuffle is a broadcast-sized
-    // reduction no matter the row count.
+    // established ln/exp recipe (the engine's `lon - (-74.0)` against
+    // the oracle's `lon + 74.0` is exact in IEEE 754). Scale shape:
+    // map-only derive + filter, then ONE grid-keyed agg; cells are
+    // bounded by the geometry (≤288 here), so the shuffle is a
+    // broadcast-sized reduction no matter the row count.
     GraftQuery(
       "q125_search_geo_grid",
-      (s, dir) => {
-        val pi = lit(math.Pi)
-        val pts = GeoFixtures.syntheticPoints(Tables.load(s, dir, "customer"))
-        val sdlat = sin((col("lat") - lit(40.0)) * pi / lit(180.0) / lit(2.0))
-        val sdlon = sin((col("lon") + lit(74.0)) * pi / lit(180.0) / lit(2.0))
-        val dist = round(
-          lit(12742.0176) * asin(sqrt(
-            sdlat * sdlat +
-              cos(lit(40.0) * pi / lit(180.0)) * cos(col("lat") * pi / lit(180.0)) *
-                sdlon * sdlon)), 6)
-        pts.withColumn("dist_km", dist)
-          .filter(col("dist_km") <= lit(5000.0))
-          .groupBy(floor(col("lat") / lit(15.0)).as("cell_lat"),
-            floor(col("lon") / lit(15.0)).as("cell_lon"))
-          .agg(count(lit(1)).as("n"), min(col("dist_km")).as("min_dist"))
-          .orderBy(col("cell_lat"), col("cell_lon"))
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .geoGrid(GeoFixtures.syntheticPoints(Tables.load(s, dir, "customer")),
+          "lat", "lon", latQ = 40.0, lonQ = -74.0, radiusKm = 5000.0,
+          cellDeg = 15.0),
       Some("""
         WITH pts AS (
           SELECT c_custkey,
@@ -1291,22 +1237,11 @@ object Search {
     // positions with DuckDB's aligned parallel unnest.
     GraftQuery(
       "q126_search_span_near",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val pos = d.select(col("doc_id"),
-          posexplode(TextFns.tokens(col("text"))).as(Seq("p", "tok")))
-        val p1 = pos.filter(col("tok") === "spark")
-          .select(col("doc_id"), col("p").as("p1"))
-        val p2 = pos.filter(col("tok") === "join")
-          .select(col("doc_id"), col("p").as("p2"))
-        p1.join(p2, "doc_id")
-          .withColumn("gap", (abs(col("p1") - col("p2")) - 1).cast("long"))
-          .filter(col("gap") <= 3)
-          .groupBy(col("doc_id"))
-          .agg(count(lit(1)).as("n_pairs"), min(col("gap")).as("min_gap"))
-          .orderBy(col("n_pairs").desc, col("doc_id"))
-          .limit(25)
-      },
+      // the facade pipeline IS the gated implementation (see q117)
+      (s, dir) => graft.GraftEngine(s)
+        .spanNear(Tables.load(s, dir, "documents"), "doc_id", "text",
+          "spark", "join", slop = 3)
+        .limit(25),
       Some("""
         WITH arr AS (SELECT doc_id, string_split(text, ' ') AS a FROM documents),
         pos AS (

@@ -3479,9 +3479,10 @@ private[search] trait QueryDslClauses { this: QueryDsl.type =>
     haversineKmCols(col(latF), col(lonF), latQ, lonQ)
 
   /** The same pinned formula over arbitrary lat/lon COLUMNS (corner /
-    * clamp expressions of the envelope-doc circle arm).
+    * clamp expressions of the envelope-doc circle arm, and the
+    * facade's `GraftEngine.geoGrid`).
     */
-  private[search] def haversineKmCols(latC: Column, lonC: Column,
+  private[graft] def haversineKmCols(latC: Column, lonC: Column,
       latQ: Double, lonQ: Double): Column = {
     val pi = lit(math.Pi)
     val sdlat = sin((latC - lit(latQ)) * pi / lit(180.0) / lit(2.0))

@@ -256,17 +256,27 @@ class GraftEngineSpec extends SparkSpec {
 
   test("LM/DSIR/classifier facade methods match their oracle-gated queries") {
     val dir = sf()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.orderBy("doc_id").collect().toSeq
+    def rows(df: org.apache.spark.sql.DataFrame, id: String = "doc_id") =
+      df.orderBy(id).collect().toSeq
+    val q154 = Registry.byName("q154_bigram_logprob").run(spark, dir)
+    val q155 = Registry.byName("q155_dsir_weights").run(spark, dir).drop("keep")
+    val q156 = Registry.byName("q156_quality_classifier").run(spark, dir)
     assert(rows(g.bigramLogProb(Tables.load(spark, dir, "documents"),
-        "doc_id", "text")) ===
-      rows(Registry.byName("q154_bigram_logprob").run(spark, dir)))
+        "doc_id", "text")) === rows(q154))
     assert(rows(g.dsirWeights(Tables.load(spark, dir, "documents"),
-        "doc_id", "text", col("lang") === "en").drop("keep")) ===
-      rows(Registry.byName("q155_dsir_weights").run(spark, dir).drop("keep")))
+        "doc_id", "text", col("lang") === "en").drop("keep")) === rows(q155))
     assert(rows(g.qualityClassifier(Tables.load(spark, dir, "documents"),
-        "doc_id", "text")) ===
-      rows(Registry.byName("q156_quality_classifier").run(spark, dir)))
+        "doc_id", "text")) === rows(q156))
+    // the same input under other column names: a body that still
+    // hard-codes doc_id or text fails here
+    val renamed = Tables.load(spark, dir, "documents")
+      .withColumnRenamed("doc_id", "id").withColumnRenamed("text", "body")
+    def reg(df: org.apache.spark.sql.DataFrame) =
+      rows(df.withColumnRenamed("doc_id", "id"), "id")
+    assert(rows(g.bigramLogProb(renamed, "id", "body"), "id") === reg(q154))
+    assert(rows(g.dsirWeights(renamed, "id", "body", col("lang") === "en"), "id") ===
+      reg(q155))
+    assert(rows(g.qualityClassifier(renamed, "id", "body"), "id") === reg(q156))
     // a planted high-weight token flips the classifier's label
     import spark.implicits._
     val toy = Seq((1L, "alpha beta"), (2L, "alpha alpha alpha")).toDF("doc_id", "text")

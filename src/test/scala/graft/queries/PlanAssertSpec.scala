@@ -352,6 +352,81 @@ class PlanAssertSpec extends SparkSpec {
       s"conjunctive range not pushed to the scan: $pushed")
   }
 
+  test("q121 phrase suggest: corpus bigrams meet the candidate pairs only by broadcast hash join") {
+    val nodes = finalNodes(Registry.byName("q121_search_phrase_suggest").run(spark, sf()))
+    // the corpus bigram count table: the aggregate that emits bcount
+    def hasBigrams(p: SparkPlan): Boolean = flatten(p).exists {
+      case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec =>
+        a.output.exists(_.name == "bcount")
+      case _ => false
+    }
+    assert(nodes.exists(hasBigrams), s"no bigram aggregate:\n${nodes.head}")
+    val joins = nodes.collect { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+    // every join above the corpus-sized table is a broadcast hash join
+    // (the probe by the pairs, then the ≤ perPosition² hits broadcast
+    // back into the left join) — never a shuffle join or a loop
+    val overBigrams = joins.filter(j => j.children.exists(hasBigrams))
+    assert(overBigrams.nonEmpty, s"bigrams never joined:\n${nodes.head}")
+    overBigrams.foreach { j =>
+      assert(j.isInstanceOf[BroadcastHashJoinExec],
+        s"bigram table joined by ${j.nodeName}:\n$j")
+    }
+    // the probe streams the corpus-sized table against the broadcast
+    // candidate pairs, never the other way round
+    assert(overBigrams.exists {
+      case j: BroadcastHashJoinExec =>
+        val (build, stream) =
+          if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight)
+            (j.right, j.left) else (j.left, j.right)
+        hasBigrams(stream) && !hasBigrams(build)
+      case _ => false
+    }, s"bigram table is broadcast instead of probed:\n${nodes.head}")
+    // nested-loop joins live only on the request side: the input band
+    // (broadcast inputs against the vocabulary, as in q117) and the
+    // unconditioned candidate expansion, bounded at perPosition² = 25
+    val loops = joins.filter {
+      case _: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => true
+      case _: org.apache.spark.sql.execution.joins.CartesianProductExec => true
+      case _ => false
+    }
+    loops.foreach(j => assert(!hasBigrams(j), s"bigram table in a loop join:\n$j"))
+    val expansion = loops.collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+        if j.condition.isEmpty => j
+      case j: org.apache.spark.sql.execution.joins.CartesianProductExec
+        if j.condition.isEmpty => j
+    }
+    assert(expansion.nonEmpty, s"no candidate expansion:\n${nodes.head}")
+    expansion.foreach { j =>
+      assert(j.metrics("numOutputRows").value <= 25L,
+        s"candidate expansion exceeds perPosition²:\n$j")
+    }
+    // the other loop is the input band: its broadcast side is the
+    // request's inputs, no file scan behind it
+    loops.filterNot(expansion.contains).foreach {
+      case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec =>
+        val build =
+          if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight) j.right
+          else j.left
+        assert(!flatten(build).exists(_.isInstanceOf[FileSourceScanExec]),
+          s"input band broadcasts a data side:\n$j")
+      case j => fail(s"input band is a cartesian product:\n$j")
+    }
+  }
+
+  test("q72 minhash lsh: the corpus is scanned once") {
+    // the `size(ids) >= 1` guard in MinHashLsh keeps collect_list
+    // referenced on the reps branch, so both consumers of the
+    // canonical-text aggregate share one exchange; if column pruning
+    // ever folds the guard away, the corpus is scanned once per
+    // consumer with no functional signal — this pin is that signal
+    val df = Registry.byName("q72_dedup_minhash_lsh").run(spark, sf())
+    df.collect()
+    val scans = graft.ScanCount.distinctScans(df)
+    assert(scans.size === 1, s"q72 reads its input ${scans.size}×:\n" +
+      df.queryExecution.executedPlan)
+  }
+
   test("q123 search_after: cursor predicate pushed to the scan, zero shuffles") {
     val nodes = finalNodes(Registry.byName("q123_search_search_after").run(spark, sf()))
     // keyset pagination's whole point: the disjunctive cursor range is a
