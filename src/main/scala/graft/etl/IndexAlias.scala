@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.VersionPointer
+
 /** Zero-downtime reindex through an index ALIAS — the OpenSearch
   * operational pattern behind every breaking mapping change: build the
   * new index under a fresh physical name, then atomically repoint the
@@ -10,21 +12,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * remove/add; the reference's stack creates and retires per-entity
   * indices the same way). The parquet realization: an alias directory
   * holds versioned index layouts (`v1`, `v2`, …) plus a one-line
-  * `_active` pointer file; readers resolve the pointer, writers build
-  * a full [[SearchIndex]] layout under the NEXT version and cut over
-  * with a temp-write + atomic rename — the same commit discipline as
-  * the streaming epoch markers.
+  * `_active` pointer committed through [[graft.sources.VersionPointer]];
+  * a layout is complete once its `stats` (written LAST by
+  * [[SearchIndex.build]]) exists.
   *
-  * Crash shapes: a crash mid-build leaves a half-written `vN+1` that
-  * no reader ever resolves (the pointer still names `vN`); re-running
-  * the reindex claims the NEXT free number and abandons the debris,
-  * which ages out through [[prune]] once its number falls below the
-  * active version. A crash between pointer delete and rename is
-  * repaired by `resolve`'s fallback (highest complete version). Old
-  * versions stay on disk for rollback until [[prune]]. Concurrent
-  * `reindex` calls are serialized per version by an atomic
-  * no-overwrite claim-file create — losers move to the next number
-  * rather than interleaving writes into the same layout.
+  * A crash mid-build leaves a half-written `vN+1` that no reader ever
+  * resolves; re-running the reindex claims the NEXT free number and
+  * abandons the debris, which ages out through [[prune]] once its
+  * number falls below the active version. Old versions stay on disk
+  * for rollback until [[prune]]. Concurrent `reindex` calls are
+  * serialized per version by an atomic no-overwrite claim-file create —
+  * losers move to the next number rather than interleaving writes into
+  * the same layout.
   *
   * Scale: cutover cost is one file rename regardless of index size;
   * the build is [[SearchIndex.build]]'s own shape (one corpus pass,
@@ -33,49 +32,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object IndexAlias {
 
   private def fsOf(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    VersionPointer.fsOf(p, spark.sparkContext.hadoopConfiguration)
 
-  private def pointerPath(aliasDir: String) = new Path(s"$aliasDir/_active")
+  private def versions(spark: SparkSession, aliasDir: String): Seq[Int] =
+    VersionPointer.versions(fsOf(spark, aliasDir), aliasDir, "v").map(_.toInt)
 
-  private def versions(spark: SparkSession, aliasDir: String): Seq[Int] = {
-    val root = new Path(aliasDir)
+  /** The active version number: the `_active` pointer, else the highest
+    * version holding a complete layout.
+    */
+  private def activeVersion(spark: SparkSession, aliasDir: String): Option[Int] = {
     val fs = fsOf(spark, aliasDir)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.collect {
-      case s if s.isDirectory && s.getPath.getName.matches("v\\d+") =>
-        s.getPath.getName.drop(1).toInt
-    }.sorted
+    VersionPointer.resolve(fs, aliasDir, "_active", "v")(parseVersion,
+      v => fs.exists(new Path(s"$aliasDir/v$v/stats"))).map(_.toInt)
   }
 
-  /** The active physical index dir, or None before the first reindex.
-    * Falls back to the highest version holding a complete layout when
-    * the pointer file is missing (the crash-between-delete-and-rename
-    * window) — stats is written LAST by [[SearchIndex.build]], so its
-    * presence marks a complete build.
-    */
-  def resolve(spark: SparkSession, aliasDir: String): Option[String] = {
-    val fs = fsOf(spark, aliasDir)
-    val p = pointerPath(aliasDir)
-    val pointed =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        if (v.nonEmpty) Some(s"$aliasDir/$v") else None
-      }
-    pointed.orElse {
-      versions(spark, aliasDir).reverse
-        .map(v => s"$aliasDir/v$v")
-        .find(d => fs.exists(new Path(s"$d/stats")))
-    }
-  }
+  private def parseVersion(pointer: String) = pointer.stripPrefix("v").toLongOption
 
-  /** Build a fresh BM25 layout from `docs` under the next version and
-    * atomically cut the alias over to it. Readers in flight keep the
-    * old layout; new resolves see the new one. Returns the new
-    * physical dir.
-    */
+  /** The active physical index dir, or None before the first reindex. */
+  def resolve(spark: SparkSession, aliasDir: String): Option[String] =
+    activeVersion(spark, aliasDir).map(v => s"$aliasDir/v$v")
+
   /** Atomic create-without-overwrite of the claim file: true = claimed,
     * false = another writer holds it. On the local filesystem Hadoop's
     * `create(f, overwrite=false)` is an exists-then-open TOCTOU window,
@@ -89,13 +65,10 @@ object IndexAlias {
       aliasDir: String, n: Int): Boolean = {
     val p = new Path(s"$aliasDir/_claim_v$n")
     try {
-      fs match {
-        case _: org.apache.hadoop.fs.LocalFileSystem |
-             _: org.apache.hadoop.fs.RawLocalFileSystem =>
-          java.nio.file.Files.createFile(
-            java.nio.file.Paths.get(p.toUri.getPath)): Unit
-        case _ => fs.create(p, false).close()
-      }
+      if (VersionPointer.isLocal(fs))
+        java.nio.file.Files.createFile(
+          java.nio.file.Paths.get(p.toUri.getPath)): Unit
+      else fs.create(p, false).close()
       true
     } catch {
       case _: java.nio.file.FileAlreadyExistsException => false
@@ -103,6 +76,11 @@ object IndexAlias {
     }
   }
 
+  /** Build a fresh BM25 layout from `docs` under the next version and
+    * atomically cut the alias over to it. Readers in flight keep the
+    * old layout; new resolves see the new one. Returns the new
+    * physical dir.
+    */
   def reindex(docs: DataFrame, idCol: String, textCol: String,
       aliasDir: String, buckets: Int = 64): String = {
     val spark = docs.sparkSession
@@ -117,30 +95,21 @@ object IndexAlias {
     SearchIndex.build(docs, idCol, textCol, dir, buckets)
     // cutover is monotonic: if a LATER-claimed build finished first
     // (its version is higher), leave its pointer alone — last-writer-
-    // wins here would park the alias on the older corpus forever
-    val active = resolve(spark, aliasDir)
-      .map(_.split('/').last.drop(1).toInt).getOrElse(0)
-    if (next > active) swap(spark, aliasDir, s"v$next")
+    // wins here would park the alias on the older corpus forever. The
+    // pointer itself decides: resolve's fallback already sees this
+    // build as the newest complete layout and would skip the cutover
+    val pointed = VersionPointer.read(fs, aliasDir, "_active").flatMap(parseVersion)
+    if (next > pointed.getOrElse(0L)) swap(spark, aliasDir, s"v$next")
     dir
   }
 
-  /** Atomically repoint the alias at `version` (temp + rename). */
+  /** Atomically repoint the alias at `version`. */
   def swap(spark: SparkSession, aliasDir: String, version: String): Unit = {
     require(version.matches("v\\d+"), s"not a version name: $version")
     val fs = fsOf(spark, aliasDir)
     require(fs.exists(new Path(s"$aliasDir/$version/stats")),
       s"refusing to point alias at incomplete layout $aliasDir/$version")
-    val tmp = new Path(s"$aliasDir/_active.tmp$version")
-    val out = fs.create(tmp, true)
-    try out.write(version.getBytes("UTF-8")) finally out.close()
-    fs.delete(pointerPath(aliasDir), false)
-    // Hadoop rename reports most failures as `false`, not an exception;
-    // swallowing it would leave the alias pointerless and resolve's
-    // fallback serving the HIGHEST version — during a rollback, the
-    // exact version being rolled back from
-    require(fs.rename(tmp, pointerPath(aliasDir)),
-      s"alias cutover rename failed for $aliasDir -> $version; " +
-        "pointer removed, readers now resolve the newest complete version")
+    VersionPointer.commit(fs, aliasDir, "_active", version)
   }
 
   /** Serve BM25 through the alias — fails loud before the first
@@ -159,10 +128,9 @@ object IndexAlias {
     */
   def prune(spark: SparkSession, aliasDir: String): Seq[String] = {
     val fs = fsOf(spark, aliasDir)
-    val active = resolve(spark, aliasDir)
-      .map(_.split('/').last.drop(1).toInt).getOrElse(return Seq.empty)
+    val active = activeVersion(spark, aliasDir).getOrElse(return Seq.empty)
     versions(spark, aliasDir).filter(_ < active)
-      .filterNot(v => isPinned(aliasDir, s"v$v"))
+      .filterNot(v => VersionPointer.isPinned(fs, aliasDir, s"v$v"))
       .map { v =>
         fs.delete(new Path(s"$aliasDir/v$v"), true)
         fs.delete(new Path(s"$aliasDir/_claim_v$v"), false) // claim goes with it
@@ -178,50 +146,28 @@ object IndexAlias {
     * keyset against the ranking, and a cutover between pages swaps the
     * ranking underneath the cursor, silently skipping or repeating
     * documents. The pin also shields the version from [[prune]] until
-    * [[releasePit]].
-    *
-    * Pins are per-JVM driver state (refcounted): the single-driver
-    * serving shape this harness runs. A multi-driver deployment would
-    * persist pin leases next to the claim files — same discipline,
-    * different store.
+    * [[releasePit]]; the pin lives in [[VersionPointer]]'s table.
     */
   final case class Pit(aliasDir: String, version: String) {
     def dir: String = s"$aliasDir/$version"
   }
 
-  private val pitPins = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  private def pinKey(aliasDir: String, version: String) = s"$aliasDir@$version"
-
-  private[graft] def isPinned(aliasDir: String, version: String): Boolean =
-    pitPins.containsKey(pinKey(aliasDir, version))
-
   /** Resolve the alias once and pin the result. Fails loud before the
     * first reindex (no version to pin).
     */
-  def openPit(spark: SparkSession, aliasDir: String): Pit = {
-    val dir = resolve(spark, aliasDir).getOrElse(throw new IllegalStateException(
-      s"alias $aliasDir resolves to no index — reindex first"))
-    val version = dir.split('/').last
-    pitPins.merge(pinKey(aliasDir, version), 1, (a, b) => a + b): Unit
-    Pit(aliasDir, version)
-  }
+  def openPit(spark: SparkSession, aliasDir: String): Pit =
+    VersionPointer.pin(fsOf(spark, aliasDir), aliasDir, s"alias $aliasDir") { () =>
+      val v = "v" + activeVersion(spark, aliasDir).getOrElse(throw new IllegalStateException(
+        s"alias $aliasDir resolves to no index — reindex first"))
+      (Pit(aliasDir, v), Seq(v), Seq(s"$v/stats"))
+    }
 
   /** End the pagination session: drop one pin reference; at zero the
     * version becomes prunable again. Releasing an unpinned handle
     * fails loud (a double release hides a refcount bug).
     */
-  def releasePit(pit: Pit): Unit = {
-    val k = pinKey(pit.aliasDir, pit.version)
-    // one atomic compute — a check-then-act pair would let two
-    // concurrent releases of a refcount-1 pin both pass the check and
-    // silently hide the double release this guard exists to catch
-    pitPins.compute(k, (_, n) =>
-      if (n == null)
-        throw new IllegalStateException(s"pit $k is not pinned (double release?)")
-      else if (n <= 1) null
-      else n - 1): Unit
-  }
+  def releasePit(pit: Pit): Unit =
+    VersionPointer.release(VersionPointer.fsOf(pit.aliasDir), pit.aliasDir, Seq(pit.version))
 
   /** One `search_after` page against the PINNED version: the cursor is
     * the last (score, doc_id) of the previous page, the ranking total

@@ -4,6 +4,8 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.VersionPointer
+
 /** VERSIONED IVF serving store with point-in-time pins (r16, VERDICT
   * r15 #5) — the [[graft.etl.IndexAlias]] / [[graft.streaming.TablePit]]
   * discipline brought to the vector-index layouts: [[IvfIndex
@@ -11,13 +13,14 @@ import org.apache.spark.sql.functions._
   * clusters IN PLACE, so a search session paging mid-merge can see
   * mixed state. Here every merge instead writes a NEW version holding
   * ONLY the clusters it touched, plus a tiny cluster map naming, per
-  * cluster, the version that hosts its current piece:
+  * cluster, the version that hosts its current piece; a version is
+  * complete once its map is written:
   *
   * {{{
   * root/v1/data/cluster=*        full build (+ v1/centroids)
   * root/v3/data/cluster=7        a merge's rewrite of cluster 7
   * root/_clustermap_v3           "centroids v1", then "<cluster> v<host>"
-  * root/_active                  current map version (temp+rename flip)
+  * root/_active                  current map version (VersionPointer commit)
   * }}}
   *
   * Copy-on-write economics at 100 TB: a merge still reads and writes
@@ -29,13 +32,11 @@ import org.apache.spark.sql.functions._
   * path-enumerated pruning, strictly the same bytes the partition
   * filter would admit.
   *
-  * Pins are per-JVM driver refcounts (the single-driver serving shape,
-  * same as IndexAlias/TablePit; a multi-driver deployment would persist
-  * pin leases beside the map files). Single-writer contract for
-  * [[build]]/[[merge]] (the CdcMerge epoch discipline): crash mid-merge
-  * leaves an unreferenced version the pointer never named — the next
-  * merge claims a higher number and [[vacuum]] reclaims the debris once
-  * the pointer moves past it.
+  * Pins live in [[graft.sources.VersionPointer]]'s one table.
+  * Single-writer contract for [[build]]/[[merge]] (the CdcMerge epoch
+  * discipline): crash mid-merge leaves an unreferenced version the
+  * pointer never named — the next merge claims a higher number and
+  * [[vacuum]] reclaims the debris once the pointer moves past it.
   *
   * SignPq/SignIvf note: those quantizers serve in-memory from the
   * corpus (no persisted layout exists to pin); the IVF store here is
@@ -47,58 +48,25 @@ object IvfAlias {
       clusterMap: Map[Int, Int])
 
   private def fsOf(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    VersionPointer.fsOf(p, spark.sparkContext.hadoopConfiguration)
 
-  /** Pin keys address the directory, not its spelling (the TablePit
-    * lesson): qualify through the Hadoop FS so `root/`, relative and
-    * scheme-full forms land on one key.
-    */
-  private def normRoot(spark: SparkSession, root: String): String =
-    fsOf(spark, root).makeQualified(new Path(root)).toString
-
-  private val pins = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  private def pinKey(spark: SparkSession, root: String, v: Int) =
-    s"${normRoot(spark, root)}@v$v"
-
-  private def versionsOnDisk(spark: SparkSession, root: String): Seq[Int] = {
-    val r = new Path(root)
-    val fs = fsOf(spark, root)
-    if (!fs.exists(r)) Seq.empty
-    else fs.listStatus(r).toSeq.collect {
-      case s if s.isDirectory && s.getPath.getName.matches("v\\d+") =>
-        s.getPath.getName.drop(1).toInt
-    }.sorted
-  }
+  private def versionsOnDisk(spark: SparkSession, root: String): Seq[Int] =
+    VersionPointer.versions(fsOf(spark, root), root, "v").map(_.toInt)
 
   private def mapPath(root: String, v: Int) = new Path(s"$root/_clustermap_v$v")
-  private def pointerPath(root: String) = new Path(s"$root/_active")
-
-  private def writeText(spark: SparkSession, p: Path, text: String): Unit = {
-    val out = fsOf(spark, p.toString).create(p, true)
-    try out.write(text.getBytes("UTF-8")) finally out.close()
-  }
-
-  private def readText(spark: SparkSession, p: Path): Option[String] = {
-    val fs = fsOf(spark, p.toString)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-      finally in.close()
-    }
-  }
 
   private def writeMap(spark: SparkSession, root: String, v: Int,
-      centVer: Int, cmap: Map[Int, Int]): Unit =
-    writeText(spark, mapPath(root, v),
-      (s"centroids v$centVer" +:
+      centVer: Int, cmap: Map[Int, Int]): Unit = {
+    val out = fsOf(spark, root).create(mapPath(root, v), true)
+    try out.write((s"centroids v$centVer" +:
         cmap.toSeq.sortBy(_._1).map { case (c, hv) => s"$c v$hv" })
-        .mkString("\n"))
+        .mkString("\n").getBytes("UTF-8"))
+    finally out.close()
+  }
 
   private def readMap(spark: SparkSession, root: String,
       v: Int): (Int, Map[Int, Int]) = {
-    val lines = readText(spark, mapPath(root, v)).getOrElse(
+    val lines = VersionPointer.read(fsOf(spark, root), root, s"_clustermap_v$v").getOrElse(
       throw new IllegalStateException(
         s"cluster map _clustermap_v$v missing under $root")).linesIterator
       .map(_.trim).filter(_.nonEmpty).toSeq
@@ -113,39 +81,33 @@ object IvfAlias {
     }.toMap)
   }
 
-  /** Atomically repoint `_active` at version `v` (temp + rename — the
-    * IndexAlias cutover discipline, rename failure loud).
+  /** The active map version: the `_active` pointer, else the newest
+    * version whose map is written. Fails loud before the first build.
     */
-  private def flip(spark: SparkSession, root: String, v: Int): Unit = {
+  def activeVersion(spark: SparkSession, root: String): Int = {
     val fs = fsOf(spark, root)
-    val tmp = new Path(s"$root/_active.tmp$v")
-    writeText(spark, tmp, s"v$v")
-    fs.delete(pointerPath(root), false)
-    require(fs.rename(tmp, pointerPath(root)),
-      s"pointer flip rename failed for $root -> v$v")
+    VersionPointer.resolve(fs, root, "_active", "v")(parseVersion,
+      v => fs.exists(mapPath(root, v.toInt)))
+      .map(_.toInt).getOrElse(throw new IllegalStateException(
+        s"ivf store $root has no active version — build first"))
   }
 
-  /** The active map version — fails loud before the first build. */
-  def activeVersion(spark: SparkSession, root: String): Int =
-    readText(spark, pointerPath(root))
-      .map(_.trim.stripPrefix("v").toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"ivf store $root has no active version — build first"))
+  private def parseVersion(pointer: String) = pointer.stripPrefix("v").toLongOption
+
+  /** Next free version number — above every on-disk dir AND the
+    * pointer (a pure-delete merge moves the pointer without creating
+    * a data dir, and reusing its number would overwrite the live map).
+    */
+  private def nextVersion(spark: SparkSession, root: String): Int = {
+    val ptr = VersionPointer.read(fsOf(spark, root), root, "_active")
+      .flatMap(parseVersion).getOrElse(0L).toInt
+    (versionsOnDisk(spark, root) :+ ptr :+ 0).max + 1
+  }
 
   /** Full (re)build under the next version: an [[IvfIndex.writeIndex]]
     * layout (data + centroids + optional payload columns) plus the
     * cluster map naming this version as every cluster's host.
     */
-  /** Next free version number — above every on-disk dir AND the
-    * pointer (a pure-delete merge flips the pointer without creating
-    * a data dir, and reusing its number would overwrite the live map).
-    */
-  private def nextVersion(spark: SparkSession, root: String): Int = {
-    val ptr = readText(spark, pointerPath(root))
-      .map(_.trim.stripPrefix("v").toInt).getOrElse(0)
-    (versionsOnDisk(spark, root) :+ ptr :+ 0).max + 1
-  }
-
   def build(embeddings: DataFrame, idCol: String, embCol: String,
       p: IvfIndex.Params, root: String, payloadCols: Seq[String] = Nil): Int = {
     val spark = embeddings.sparkSession
@@ -157,7 +119,7 @@ object IvfAlias {
         s.getPath.getName.stripPrefix("cluster=").toInt
     }
     writeMap(spark, root, n, n, clusters.map(_ -> n).toMap)
-    flip(spark, root, n)
+    VersionPointer.commit(fs, root, "_active", s"v$n")
     n
   }
 
@@ -186,7 +148,7 @@ object IvfAlias {
     * contract (one row per key, upsert/delete, nearest EXISTING
     * centroid) realized copy-on-write: touched clusters are rewritten
     * under the NEXT version, untouched clusters stay shared, and the
-    * pointer flip publishes the new map atomically. Returns the new
+    * pointer commit publishes the new map atomically. Returns the new
     * version.
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame,
@@ -243,7 +205,7 @@ object IvfAlias {
       val newMap = (cmap -- touched.filterNot(stillThere)) ++
         touched.filter(stillThere).map(_ -> n)
       writeMap(spark, root, n, n, newMap)
-      flip(spark, root, n)
+      VersionPointer.commit(fsOf(spark, root), root, "_active", s"v$n")
       n
     } finally assigned.unpersist()
   }
@@ -288,42 +250,21 @@ object IvfAlias {
     IvfIndex.probeTopK(corpus, qs, probes, p)
   }
 
-  /** Pin the active map for a pagination session. Pin-then-verify (the
-    * TablePit race lesson): after the pin lands, every directory the
-    * map references is re-checked; a piece a racing vacuum swept
-    * releases and re-resolves, failing loud only if the store stays
-    * unstable across retries.
+  /** Pin the active map for a pagination session (see
+    * [[VersionPointer.pin]]: every directory the map references is
+    * re-checked once the pin lands).
     */
-  def openPit(spark: SparkSession, root: String): Pit = {
-    val fs = fsOf(spark, root)
-    var attempt = 0
-    while (true) {
-      attempt += 1
+  def openPit(spark: SparkSession, root: String): Pit =
+    VersionPointer.pin(fsOf(spark, root), root, s"ivf store $root") { () =>
       val v = activeVersion(spark, root)
       val (centVer, cmap) = readMap(spark, root, v)
-      pins.merge(pinKey(spark, root, v), 1, (a, b) => a + b): Unit
-      val pieces = s"$root/v$centVer/centroids" +:
-        cmap.toSeq.map { case (c, hv) => s"$root/v$hv/data/cluster=$c" }
-      if (pieces.forall(pp => fs.exists(new Path(pp))))
-        return Pit(root, v, centVer, cmap)
-      release(spark, Pit(root, v, centVer, cmap))
-      if (attempt >= 3)
-        throw new IllegalStateException(
-          s"ivf store $root kept losing pieces to concurrent vacuums " +
-            s"across $attempt open attempts — quiesce the vacuum cadence")
+      (Pit(root, v, centVer, cmap), Seq(s"v$v"),
+        s"v$centVer/centroids" +: cmap.toSeq.map { case (c, hv) => s"v$hv/data/cluster=$c" })
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** Drop one pin reference; double release fails loud. */
-  def release(spark: SparkSession, pit: Pit): Unit = {
-    pins.compute(pinKey(spark, pit.root, pit.version), (_, n) =>
-      if (n == null)
-        throw new IllegalStateException(
-          s"ivf pit ${pit.root}@v${pit.version} is not pinned (double release?)")
-      else if (n <= 1) null
-      else n - 1): Unit
-  }
+  def release(spark: SparkSession, pit: Pit): Unit =
+    VersionPointer.release(fsOf(spark, pit.root), pit.root, Seq(s"v${pit.version}"))
 
   /** Reclaim version directories nothing references: keep the active
     * version, everything its map references, every PINNED map's
@@ -333,9 +274,8 @@ object IvfAlias {
   def vacuum(spark: SparkSession, root: String): Seq[Int] = {
     val fs = fsOf(spark, root)
     val active = activeVersion(spark, root)
-    val norm = normRoot(spark, root)
     val pinnedMapVers = versionsOnDisk(spark, root)
-      .filter(v => pins.containsKey(s"$norm@v$v"))
+      .filter(v => VersionPointer.isPinned(fs, root, s"v$v"))
     def refsOf(v: Int): Set[Int] = {
       val (cv, cm) = readMap(spark, root, v)
       cm.values.toSet + cv + v

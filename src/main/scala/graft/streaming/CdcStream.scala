@@ -1,12 +1,14 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.etl.{CdcMerge, DdbJson}
+import graft.sources.VersionPointer
 
 /** The CDC streaming path (SURVEY.md §2.10): tail a change-event feed,
   * decode, and maintain per-key last-writer-wins state in a parquet
@@ -16,12 +18,12 @@ import graft.etl.{CdcMerge, DdbJson}
   * index/update/delete actions :350-351).
   *
   * The sink is a versioned-snapshot parquet table: each epoch writes a
-  * full new snapshot directory `v=<epoch>` and bumps a pointer file.
-  * Readers resolve the pointer — writers never mutate a directory a
-  * reader may be scanning. (With a transactional table format the merge
-  * body becomes a single MERGE INTO; the surrounding plan is identical.)
-  * Checkpointing gives effective exactly-once per epoch on top of the
-  * at-least-once feed (ST2).
+  * full new snapshot directory `v=<epoch>` and commits the `_LATEST`
+  * pointer through [[graft.sources.VersionPointer]]; writers never
+  * mutate a directory a reader may be scanning. (With a transactional
+  * table format the merge body becomes a single MERGE INTO; the
+  * surrounding plan is identical.) Checkpointing gives effective
+  * exactly-once per epoch on top of the at-least-once feed (ST2).
   */
 object CdcStream {
 
@@ -55,12 +57,13 @@ object CdcStream {
       img.as("item"))
   }
 
+  /** The committed snapshot version: the `_LATEST` pointer, else the
+    * newest `v=` directory whose write committed (`_SUCCESS`).
+    */
   def latestVersion(targetDir: String): Option[Long] = {
-    val ptr = Paths.get(targetDir, "_LATEST")
-    val fromPtr =
-      if (!Files.exists(ptr)) None
-      else Files.readString(ptr).trim.toLongOption // unreadable → fall back
-    fromPtr.orElse(versionsOnDisk(targetDir).sorted.lastOption)
+    val fs = VersionPointer.fsOf(targetDir)
+    VersionPointer.resolve(fs, targetDir, "_LATEST", "v=")(_.toLongOption,
+      v => fs.exists(new Path(targetDir, s"v=$v/_SUCCESS")))
   }
 
   /** Current materialized state (empty-schema-safe before first epoch). */
@@ -69,27 +72,16 @@ object CdcStream {
 
   private[streaming] def writeSnapshot(df: DataFrame, targetDir: String, version: Long): Unit = {
     df.write.mode("overwrite").parquet(s"$targetDir/v=$version")
-    Files.createDirectories(Paths.get(targetDir))
-    // temp-then-atomic-rename: an in-place truncate+write would expose
-    // a concurrent reader to an empty/partial pointer file
-    val tmp = Paths.get(targetDir, s"_LATEST.tmp$version")
-    Files.writeString(tmp, version.toString,
-      StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING,
-      StandardOpenOption.WRITE)
-    Files.move(tmp, Paths.get(targetDir, "_LATEST"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    VersionPointer.commit(
+      VersionPointer.fsOf(targetDir, df.sparkSession.sparkContext.hadoopConfiguration),
+      targetDir, "_LATEST", version.toString)
   }
 
-  /** Snapshot versions present on disk (the pointer may lag or lead
+  /** Snapshot versions present on disk, ascending (the pointer may lag
     * after a crash — directories are the truth).
     */
   private[streaming] def versionsOnDisk(targetDir: String): Seq[Long] =
-    Option(new java.io.File(targetDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("v="))
-      // non-numeric v=* entries (an operator's v=bak, a stray temp dir)
-      // are ignored rather than wedging every version lookup
-      .flatMap(_.getName.stripPrefix("v=").toLongOption)
+    VersionPointer.versions(VersionPointer.fsOf(targetDir), targetDir, "v=")
 
   /** One epoch of the merge — also usable in batch backfill (ST1).
     *
@@ -108,7 +100,7 @@ object CdcStream {
     // with a fresh/cleared checkpoint against an existing target —
     // proceeding would silently re-initialize the table from one batch
     require(versions.forall(_ <= epoch),
-      s"target $targetDir holds versions ${versions.sorted.mkString(",")} above epoch $epoch — " +
+      s"target $targetDir holds versions ${versions.mkString(",")} above epoch $epoch — " +
         "was the stream restarted with a fresh checkpoint against an existing target?")
     // events whose key image couldn't produce a doc id are unaddressable
     // by the keyed merge — park them, don't clobber or drop
@@ -116,7 +108,7 @@ object CdcStream {
     if (!bad.isEmpty)
       bad.write.mode("overwrite").parquet(s"$targetDir/dlq/epoch=$epoch")
     val good = batch.filter(col("_doc_id").isNotNull)
-    val base = versions.filter(_ < epoch).sorted.lastOption
+    val base = versions.filter(_ < epoch).lastOption
     val merged = base match {
       case Some(v) => CdcMerge.applyBatch(spark.read.parquet(s"$targetDir/v=$v"), good)
       case None => CdcMerge.initialState(good)
@@ -149,15 +141,12 @@ object CdcStream {
   def vacuum(targetDir: String, keep: Int = 2): Seq[Long] = {
     require(keep >= 2,
       "keep >= 2: the newest version may be an uncommitted epoch whose replay needs the one below it")
+    val fs = VersionPointer.fsOf(targetDir)
     // PIT-pinned versions survive (TablePit.open refcounts them): a
     // pagination session must keep reading the state it opened on
-    val doomed = versionsOnDisk(targetDir).sorted.dropRight(keep)
-      .filterNot(v => TablePit.isPinnedVersion(targetDir, v))
-    doomed.foreach { v =>
-      val dir = Paths.get(targetDir, s"v=$v")
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+    val doomed = versionsOnDisk(targetDir).dropRight(keep)
+      .filterNot(v => VersionPointer.isPinned(fs, targetDir, s"v=$v"))
+    doomed.foreach(v => fs.delete(new Path(targetDir, s"v=$v"), true))
     doomed
   }
 

@@ -1,12 +1,12 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.etl.CdcMerge
+import graft.sources.VersionPointer
 
 /** Delta-log CDC sink: the write-amplification-bounded variant of
   * [[CdcStream]]'s versioned-snapshot target.
@@ -15,7 +15,7 @@ import graft.etl.CdcMerge
   * simplest crash-safe layout, but at 100 TB a per-minute CDC tick
   * would rewrite the whole table per minute. This variant is the
   * merge-on-read design (the Hudi-MOR / LSM idea, expressed as plain
-  * parquet + the same pointer-file protocol):
+  * parquet + the same [[graft.sources.VersionPointer]] commit):
   *
   *  - each epoch appends only the batch-normalized delta
   *    (`d=<epoch>`, O(batch) bytes — per-key winners, `_action` kept);
@@ -34,9 +34,10 @@ import graft.etl.CdcMerge
   * compacts), and the writer path takes as base only versions STRICTLY
   * BELOW the replaying epoch — a crash mid-compaction leaves a partial
   * `v=<epoch>` that the replay overwrites rather than reads. Readers
-  * resolve the base through the pointer file, which moves atomically
-  * only after a snapshot write completes, so they never scan a partial
-  * snapshot. At-least-once delivery of an epoch is therefore
+  * resolve the base through the pointer, which moves only after a
+  * snapshot write completes, and read only deltas whose write
+  * committed (`_SUCCESS`), so they never scan a partial directory.
+  * At-least-once delivery of an epoch is therefore
   * idempotent end-to-end; the restart guard refuses epochs below
   * anything already on disk.
   *
@@ -47,18 +48,25 @@ import graft.etl.CdcMerge
 object DeltaCdc {
 
   private[streaming] def deltasOnDisk(targetDir: String): Seq[Long] =
-    Option(new java.io.File(targetDir).listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith("d="))
-      .flatMap(_.getName.stripPrefix("d=").toLongOption)
+    VersionPointer.versions(VersionPointer.fsOf(targetDir), targetDir, "d=")
+
+  /** The committed deltas above `base`, ascending — the live tail a
+    * reader folds onto the base.
+    */
+  private[streaming] def liveDeltas(targetDir: String, base: Option[Long]): Seq[Long] = {
+    val fs = VersionPointer.fsOf(targetDir)
+    deltasOnDisk(targetDir).filter(d =>
+      base.forall(_ < d) && fs.exists(new Path(targetDir, s"d=$d/_SUCCESS")))
+  }
 
   /** Fold `base` (if any) + the given delta epochs into one state
     * frame. Deltas re-enter [[CdcMerge.applyBatch]] unioned: per-key
     * winner selection is associative, so one merge equals the
     * epoch-at-a-time sequence.
     */
-  private def stateFrom(spark: SparkSession, targetDir: String,
+  private[streaming] def stateFrom(spark: SparkSession, targetDir: String,
       base: Option[Long], deltas: Seq[Long]): Option[DataFrame] = {
-    val deltaDf = deltas.sorted.map(d => spark.read.parquet(s"$targetDir/d=$d"))
+    val deltaDf = deltas.map(d => spark.read.parquet(s"$targetDir/d=$d"))
       .reduceOption(_.unionByName(_, allowMissingColumns = true))
     (base.map(v => spark.read.parquet(s"$targetDir/v=$v")), deltaDf) match {
       case (Some(b), Some(d)) => Some(CdcMerge.applyBatch(b, d))
@@ -91,8 +99,8 @@ object DeltaCdc {
       .write.mode("overwrite").parquet(s"$targetDir/d=$epoch")
     // base strictly below the epoch: a replayed epoch must not read the
     // (possibly partial) snapshot it crashed while writing
-    val base = versions.filter(_ < epoch).sorted.lastOption
-    val live = deltasOnDisk(targetDir).filter(d => base.forall(_ < d))
+    val base = versions.filter(_ < epoch).lastOption
+    val live = liveDeltas(targetDir, base)
     if (live.size >= compactEvery)
       stateFrom(spark, targetDir, base, live).foreach { st =>
         CdcStream.writeSnapshot(st, targetDir, epoch)
@@ -108,8 +116,7 @@ object DeltaCdc {
     */
   def readState(spark: SparkSession, targetDir: String): Option[DataFrame] = {
     val base = CdcStream.latestVersion(targetDir)
-    val live = deltasOnDisk(targetDir).filter(d => base.forall(_ < d))
-    stateFrom(spark, targetDir, base, live)
+    stateFrom(spark, targetDir, base, liveDeltas(targetDir, base))
   }
 
   /** The queryable view (tombstones filtered). */
@@ -122,17 +129,14 @@ object DeltaCdc {
     * delta epochs.
     */
   def vacuumDeltas(targetDir: String): Seq[Long] = {
+    val fs = VersionPointer.fsOf(targetDir)
     // PIT-pinned deltas survive even once folded into a newer snapshot:
     // the pinned composition (old base + its deltas) must stay readable
     val doomed = (CdcStream.latestVersion(targetDir) match {
       case None => Seq.empty[Long]
-      case Some(b) => deltasOnDisk(targetDir).filter(_ <= b).sorted
-    }).filterNot(d => TablePit.isPinnedDelta(targetDir, d))
-    doomed.foreach { d =>
-      val dir = Paths.get(targetDir, s"d=$d")
-      Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-    }
+      case Some(b) => deltasOnDisk(targetDir).filter(_ <= b)
+    }).filterNot(d => VersionPointer.isPinned(fs, targetDir, s"d=$d"))
+    doomed.foreach(d => fs.delete(new Path(targetDir, s"d=$d"), true))
     doomed
   }
 

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.etl.SearchIndex
 import graft.operators.IvfIndex
+import graft.sources.VersionPointer
 
 /** CONTINUOUS search-index maintenance from a CDC stream — the
   * reference's actual program shape: a DynamoDB stream drives an
@@ -36,7 +37,7 @@ import graft.operators.IvfIndex
   *     assign to the nearest existing centroid, and a periodic batch
   *     retrain re-centers when the corpus has drifted); every later
   *     batch goes through the in-place touched-partition merge;
-  *  4. commit the epoch marker (temp + atomic rename);
+  *  4. commit the epoch marker through [[graft.sources.VersionPointer]];
   *  5. every `compactEvery` epochs, [[IndexCompaction]] bounds the
   *     file counts of the partitioned layouts.
   *
@@ -49,33 +50,23 @@ object StreamingSearchIndex {
 
   // ---- epoch marker (applied-through watermark) ----------------------
 
-  private def markerPath(dir: String) = s"$dir/_applied_epoch"
+  private val marker = "_applied_epoch"
 
-  private def fsOf(spark: org.apache.spark.sql.SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fsOf(spark: org.apache.spark.sql.SparkSession, dir: String) =
+    VersionPointer.fsOf(dir, spark.sparkContext.hadoopConfiguration)
 
+  /** The applied-through epoch. A temp marker is written only once its
+    * epoch's merges landed, so where a non-atomic replace lost the
+    * marker the newest temp still holds the restart guard.
+    */
   private[streaming] def lastApplied(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(markerPath(dir))
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLongOption
-      finally in.close()
-    }
-  }
+      spark: org.apache.spark.sql.SparkSession, dir: String): Option[Long] =
+    VersionPointer.resolve(fsOf(spark, dir), dir, marker, VersionPointer.tempPrefix(marker))(
+      _.toLongOption, _ => true)
 
   private def commitEpoch(spark: org.apache.spark.sql.SparkSession,
-      dir: String, epoch: Long): Unit = {
-    val fs = fsOf(spark, dir)
-    val tmp = new org.apache.hadoop.fs.Path(s"${markerPath(dir)}.tmp$epoch")
-    val out = fs.create(tmp, true)
-    try out.write(epoch.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(new org.apache.hadoop.fs.Path(markerPath(dir)), false)
-    fs.rename(tmp, new org.apache.hadoop.fs.Path(markerPath(dir))): Unit
-  }
+      dir: String, epoch: Long): Unit =
+    VersionPointer.commit(fsOf(spark, dir), dir, marker, epoch.toString)
 
   /** True when this epoch still needs applying; throws on the
     * cleared-checkpoint restart shape.

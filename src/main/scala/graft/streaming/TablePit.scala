@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.etl.CdcMerge
+import graft.sources.VersionPointer
 
 /** Point-in-time reads over CDC-MAINTAINED ENTITY TABLES (r15, VERDICT
   * r14 #6) — the [[graft.etl.IndexAlias]] version-pin generalized from
@@ -25,111 +26,48 @@ import graft.etl.CdcMerge
   * search DSL — `sort` + `search_after` IS the pagination surface; the
   * PIT only fixes what table it runs over.
   *
-  * Pins are per-JVM driver refcounts (the single-driver serving shape,
-  * same as the IndexAlias PIT); a multi-driver deployment would
-  * persist pin leases beside the pointer files. One documented hazard
-  * carries over from the crash-replay contract: a replayed epoch
-  * overwrites its OWN `v=`/`d=` directory, so a pin taken on an
-  * epoch whose checkpoint never committed can see that one directory
-  * rewritten — pins on committed epochs (the pointer-resolved base and
-  * the deltas below the next commit) are immutable.
+  * Pins live in [[graft.sources.VersionPointer]]'s one table. One
+  * documented hazard carries over from the crash-replay contract: a
+  * replayed epoch overwrites its OWN `v=`/`d=` directory, so a pin
+  * taken on an epoch whose checkpoint never committed can see that one
+  * directory rewritten — pins on committed epochs (the pointer-resolved
+  * base and the deltas below the next commit) are immutable.
   */
 object TablePit {
 
   final case class Pit(targetDir: String, base: Option[Long], deltas: Seq[Long])
 
-  private val pins = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private def pieces(pit: Pit): Seq[String] =
+    pit.base.map(v => s"v=$v").toSeq ++ pit.deltas.map(d => s"d=$d")
 
-  /** Pin keys address the DIRECTORY, not the spelling of its path: a
-    * vacuum passing `dir/` or a relative path must hit the same key
-    * `open` pinned under, or the pin is silently bypassed (ADVICE r15).
-    * Symlinks resolve when the directory exists (it always does on the
-    * open/vacuum paths); java.nio matches the CdcStream/DeltaCdc store
-    * resolution these pins protect.
+  /** Resolve and pin the table's current state composition (see
+    * [[VersionPointer.pin]]). Fails loud on an empty target (no
+    * snapshot and no deltas — nothing to pin).
     */
-  private def normDir(targetDir: String): String = {
-    val p = java.nio.file.Paths.get(targetDir)
-    (if (java.nio.file.Files.exists(p)) p.toRealPath()
-     else p.toAbsolutePath.normalize).toString
-  }
-
-  private def vKey(targetDir: String, v: Long) = s"${normDir(targetDir)}@v=$v"
-  private def dKey(targetDir: String, d: Long) = s"${normDir(targetDir)}@d=$d"
-
-  private[streaming] def isPinnedVersion(targetDir: String, v: Long): Boolean =
-    pins.containsKey(vKey(targetDir, v))
-
-  private[streaming] def isPinnedDelta(targetDir: String, d: Long): Boolean =
-    pins.containsKey(dKey(targetDir, d))
-
-  /** Resolve and pin the table's current state composition. Fails loud
-    * on an empty target (no snapshot and no deltas — nothing to pin).
-    *
-    * Pin-then-verify (ADVICE r15): resolution happens BEFORE the pins
-    * land, so a vacuum racing through that window can delete the very
-    * pieces being opened. After pinning, every pinned `v=`/`d=`
-    * directory is re-checked on disk; a piece the race swept away
-    * releases the attempt's pins and re-resolves (new state exists —
-    * the vacuum only runs when newer versions landed), failing loud
-    * only if the table stays unstable across the retries.
-    */
-  def open(targetDir: String): Pit = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
+  def open(targetDir: String): Pit =
+    VersionPointer.pin(VersionPointer.fsOf(targetDir), targetDir, s"table $targetDir") { () =>
       val base = CdcStream.latestVersion(targetDir)
-      val live = DeltaCdc.deltasOnDisk(targetDir)
-        .filter(d => base.forall(_ < d)).sorted
+      val live = DeltaCdc.liveDeltas(targetDir, base)
       if (base.isEmpty && live.isEmpty)
         throw new IllegalStateException(
           s"table $targetDir holds no committed state — nothing to pin")
       val pit = Pit(targetDir, base, live)
-      base.foreach(v => pins.merge(vKey(targetDir, v), 1, (a, b) => a + b): Unit)
-      live.foreach(d => pins.merge(dKey(targetDir, d), 1, (a, b) => a + b): Unit)
-      val pieces = base.map(v => s"$targetDir/v=$v").toSeq ++
-        live.map(d => s"$targetDir/d=$d")
-      if (pieces.forall(p => java.nio.file.Files.exists(java.nio.file.Paths.get(p))))
-        return pit
-      release(pit) // a racing vacuum swept a piece in the window
-      if (attempt >= 3)
-        throw new IllegalStateException(
-          s"table $targetDir kept losing pieces to concurrent vacuums " +
-            s"across $attempt open attempts — quiesce the vacuum cadence")
+      (pit, pieces(pit), pieces(pit))
     }
-    throw new IllegalStateException("unreachable")
-  }
 
   /** End the session: drop one reference per pinned piece; at zero the
     * piece becomes vacuumable again. Double release fails loud.
     */
-  def release(pit: Pit): Unit = {
-    val keys = pit.base.map(vKey(pit.targetDir, _)).toSeq ++
-      pit.deltas.map(dKey(pit.targetDir, _))
-    keys.foreach { k =>
-      pins.compute(k, (_, n) =>
-        if (n == null)
-          throw new IllegalStateException(s"pit piece $k is not pinned (double release?)")
-        else if (n <= 1) null
-        else n - 1): Unit
-    }
-  }
+  def release(pit: Pit): Unit =
+    VersionPointer.release(VersionPointer.fsOf(pit.targetDir), pit.targetDir, pieces(pit))
 
   /** The pinned state (tombstones filtered) — the same composition
     * [[DeltaCdc.readSnapshot]] serves, frozen at open time.
     */
-  def read(spark: SparkSession, pit: Pit): DataFrame = {
-    val deltaDf = pit.deltas.map(d =>
-        spark.read.parquet(s"${pit.targetDir}/d=$d"))
-      .reduceOption(_.unionByName(_, allowMissingColumns = true))
-    val state = (pit.base.map(v =>
-        spark.read.parquet(s"${pit.targetDir}/v=$v")), deltaDf) match {
-      case (Some(b), Some(d)) => CdcMerge.applyBatch(b, d)
-      case (Some(b), None)    => b
-      case (None, Some(d))    => CdcMerge.initialState(d)
-      case (None, None)       => throw new IllegalStateException("empty pit")
-    }
-    CdcMerge.snapshot(state)
-  }
+  def read(spark: SparkSession, pit: Pit): DataFrame =
+    DeltaCdc.stateFrom(spark, pit.targetDir, pit.base, pit.deltas)
+      .map(CdcMerge.snapshot)
+      .getOrElse(throw new IllegalStateException("empty pit"))
 
   /** One `search_after` page against the pinned state through the full
     * search DSL (sort / search_after / size / _source — the q123

@@ -94,6 +94,30 @@ class StreamingSearchIndexSpec extends SparkSpec {
     assert(stale.getMessage.contains("fresh checkpoint"))
   }
 
+  test("a marker rename that does not take effect fails the commit; the restart guard still holds") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failrename.impl", classOf[FailMarkerRenameFs].getName)
+    conf.setBoolean("fs.failrename.impl.disable.cache", true)
+    try {
+      val dir = "failrename://" + Files.createTempDirectory("ssidx-rename") + "/idx"
+      val deletes = Seq((5L, null: String, "delete")).toDF("doc_id", "text", "_action")
+      def epoch(e: Long): Unit =
+        StreamingSearchIndex.processTextBatch(deletes, "doc_id", "text", dir, epoch = e)
+      epoch(0L); epoch(1L)
+      assert(StreamingSearchIndex.lastApplied(spark, dir) === Some(1L))
+      FailMarkerRenameFs.failing = true
+      try intercept[java.io.IOException](epoch(2L))
+      finally FailMarkerRenameFs.failing = false
+      // the stream restarted with a cleared checkpoint must still be
+      // refused, not re-apply history onto the live index
+      val stale = intercept[IllegalStateException](epoch(0L))
+      assert(stale.getMessage.contains("fresh checkpoint"), stale.getMessage)
+    } finally {
+      conf.unset("fs.failrename.impl")
+      conf.unset("fs.failrename.impl.disable.cache")
+    }
+  }
+
   test("deletes-only first batch leaves the index unborn; the next upserts bootstrap it") {
     val base = Files.createTempDirectory("ssidx2").toString
     val dir = s"$base/idx"
@@ -255,4 +279,21 @@ class StreamingSearchIndexSpec extends SparkSpec {
     assert(served === direct,
       "the wire contract must serve the stream-built layout verbatim")
   }
+}
+
+/** The local filesystem under the `failrename` scheme, whose rename
+  * onto an `_applied_epoch` marker reports `false` while `failing` is
+  * set — the way Hadoop clients report most rename failures.
+  */
+class FailMarkerRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "failrename"
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    if (FailMarkerRenameFs.failing && dst.getName == "_applied_epoch") false
+    else super.rename(src, dst)
+}
+
+object FailMarkerRenameFs {
+  @volatile var failing = false
 }
