@@ -650,6 +650,7 @@ final case class GraftEngine(spark: SparkSession) {
     val scored = pairs.join(broadcast(hit), Seq("w1", "w2"), "left")
       .groupBy(col("words"), col("dist"))
       .agg(sum(coalesce(col("bcount"), lit(0L))).as("score"))
+    // window bound: ≤ perPosition^(phrase length) candidate phrases
     scored.withColumn("rank", row_number().over(Window.orderBy(
         col("score").desc, col("dist"), col("words"))).cast("long"))
       .filter(col("rank") <= size)

@@ -2,7 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's scale-oriented defaults.
+/** The one session factory, with the engine's scale-oriented defaults.
+  *
+  * Every session the engine runs under is built here: `Verify` (the
+  * oracle dump), `Bench`, `ScaleBench`, `ThroughputBench`, the test
+  * suites (`SparkSpec`) and perfbench. So the oracle gate and the tests
+  * check the same configuration and extensions that the benchmarks time.
+  * A caller varies only the core count.
   *
   * Local runs use `local[N]`; on a real cluster the same configs apply —
   * AQE handles runtime re-planning (coalescing post-shuffle partitions,
@@ -11,8 +17,9 @@ import org.apache.spark.sql.SparkSession
   * shuffles entirely.
   */
 object GraftSession {
-  def builder(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      : SparkSession.Builder =
+  private def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def builder(cpus: String = defaultCpus): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft")
@@ -36,8 +43,8 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
 
-  def get(): SparkSession = {
-    val spark = builder().getOrCreate()
+  def get(cpus: String = defaultCpus): SparkSession = {
+    val spark = builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

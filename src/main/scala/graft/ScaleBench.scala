@@ -306,22 +306,6 @@ object ScaleBench {
     val workRoot = args.lift(1).getOrElse("/tmp/graft_scale")
     // probe-only mode: re-measure one probe without the 40-minute
     // battery (prints its JSON fragment; scale_last.json untouched)
-    // build-only mode: materialize the perturbed replica dirs and exit,
-    // so scaling probes (QueryProbe at several core counts — the r17
-    // 8-vs-32-core evidence) can run against them without paying for
-    // the full battery
-    if (args.lift(2).contains("buildonly")) {
-      val spark0 = GraftSession.get()
-      sys.env.getOrElse("SPARK_GRAFT_SCALE_COPIES", "10,100")
-        .split(",").map(_.trim.toInt).foreach { c =>
-          val d = s"$workRoot$c"
-          if (!new java.io.File(s"$d/customer.parquet").exists())
-            buildReplica(spark0, baseDir, d, copies = c)
-          println(s"[scalebench] built $d")
-        }
-      spark0.stop()
-      return
-    }
     if (args.lift(2).contains("geoprobe")) {
       val spark0 = GraftSession.get()
       // r16 (VERDICT r15 #7): the 100× point — the sidecar's claim is

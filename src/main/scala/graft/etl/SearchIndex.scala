@@ -233,7 +233,10 @@ object SearchIndex {
         .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl")))
 
   /** Commit a (n_docs, sum_dl) aggregate as the stats row via the
-    * crash-survivable temp-write + rename protocol.
+    * crash-survivable temp-write + rename protocol. A rename that does
+    * not take effect fails loud: `stats/` is the index's completeness
+    * marker (`IndexAlias` counts `vN/stats`), so a build must not
+    * return without it.
     */
   private def writeStatsRow(spark: SparkSession, dir: String, nb: Int,
       analyzer: String, agg: DataFrame): Unit = {
@@ -245,7 +248,8 @@ object SearchIndex {
     val fs = fsOf(spark, dir)
     val statsP = new org.apache.hadoop.fs.Path(s"$dir/stats")
     if (fs.exists(statsP)) fs.delete(statsP, true)
-    fs.rename(new org.apache.hadoop.fs.Path(tmp), statsP): Unit
+    if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), statsP))
+      throw new java.io.IOException(s"stats commit: rename $tmp -> $statsP failed")
   }
 
   /** Incremental refresh from a CDC batch — one row per key

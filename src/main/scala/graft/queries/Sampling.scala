@@ -143,9 +143,8 @@ object Sampling {
         // NULL, and Spark (NULLS FIRST) and DuckDB (NULLS LAST) order
         // NULLs differently under ASC — exclude rather than depend on it
         val d = Tables.load(s, dir, "documents").filter(col("n_chars") > 0)
-        // unpartitioned window is fine HERE: it runs above the
-        // TakeOrdered limit, on exactly k rows (the plan confirms
-        // Window above TakeOrderedAndProject)
+        // window bound: k rows — it runs above the TakeOrdered limit
+        // (the plan confirms Window above TakeOrderedAndProject)
         val w = Window.orderBy(col("priority"), col("doc_id"))
         d.select(col("doc_id"), col("source"), col("n_chars").as("weight"),
             TextFns.md5hash60(concat(lit("wsample:"), col("doc_id").cast("string")))

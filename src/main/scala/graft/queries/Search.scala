@@ -327,6 +327,7 @@ object Search {
         val daily = e.groupBy(date_trunc("day", col("ts")).as("bucket"))
           .agg(count(lit(1)).as("n"),
             sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
+        // window bound (wCum, wMa, wLag): one row per day of the events' time span
         val wCum = Window.orderBy(col("bucket"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wMa = Window.orderBy(col("bucket")).rowsBetween(-2, Window.currentRow)
@@ -609,6 +610,7 @@ object Search {
           .select(col("doc_id"), col("score"))
           .orderBy(col("score").desc, col("doc_id"))
           .limit(20)
+          // window bound: ≤ 20 rows, the limit above
           .select(col("doc_id"),
             row_number().over(Window.orderBy(col("score").desc, col("doc_id")))
               .cast("long").as("bm25_rank"))
@@ -622,6 +624,7 @@ object Search {
             graft.plans.CosineSim(col("embedding"), col("_q_emb")).as("sim"))
           .orderBy(col("sim").desc, col("vec_id"))
           .limit(20)
+          // window bound: ≤ 20 rows, the limit above
           .select(col("vec_id").as("doc_id"),
             row_number().over(Window.orderBy(col("sim").desc, col("vec_id")))
               .cast("long").as("ann_rank"))

@@ -564,7 +564,7 @@ object Similarity {
       """.stripMargin.trim)),
 
     // the 1024-dim BRUTE baseline q350 is measured against (the
-    // QueryProbe crossover pair): full-dim cosine over every
+    // ANN-vs-brute crossover pair): full-dim cosine over every
     // (query, corpus) pair, top 10 — same fixture, same arithmetic.
     GraftQuery(
       "q351_ann_brute_1024",

@@ -1006,6 +1006,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
                 .groupBy(col("__cc_v")).agg(min(col("__cc_k")).as("__cc_k"))
                 .groupBy(col("__cc_k")).agg(count(lit(1)).as("__cc_n"))
               import org.apache.spark.sql.expressions.Window
+              // window bound: the histogram's bucket count, capped (100k) only under min_doc_count 0
               bt.join(perK, col(name) <=> col("__cc_k"), "left")
                 .drop("__cc_k")
                 .withColumn(subName,
@@ -2258,6 +2259,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
       .withColumn("__ir", row_number().over(wInnerRank))
     val innerLimited =
       innerSize.map(nn => withTot.filter(col("__ir") <= nn)).getOrElse(withTot)
+    // window bound: none — outer keys × ≤ inner size rows; outer size cuts after it
     val wOuterRank = Window.orderBy(col(s"${name}_doc_count").desc, col(name).asc)
     val ranked = innerLimited.withColumn("__or", dense_rank().over(wOuterRank))
     val outLimited =
@@ -2289,6 +2291,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
       pipeEntries: Seq[(String, JValue)],
       metricNames: Seq[String]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // window bound: terms `size` if set, else the uncapped key or bucket count
     val wKey = Window.orderBy(col(name).asc)
     // Three pipeline families, applied in dependency order (the
     // OpenSearch evaluation model, independent of declaration order):
@@ -2576,6 +2579,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
             // offset over the bounded bucket table: a row_number window
             // in the SAME total order, then filter — never a collect.
             import org.apache.spark.sql.expressions.Window
+            // window bound: the bucket table, as `wKey` in withPipelineAggs
             val rn = row_number().over(Window.orderBy(sortCols: _*))
             sorted.withColumn("__rn", rn).filter(col("__rn") > from)
               .drop("__rn").orderBy(sortCols: _*)
@@ -2789,6 +2793,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
     // the sample.
     import org.apache.spark.sql.expressions.Window
     val ord = Seq(col("score").desc, col(tiebreak).asc)
+    // window bound: ≤ shard_size + 1 rows, the limit
     val plus = hits.orderBy(ord: _*).limit(n + 1)
       .withColumn("__rn", row_number().over(Window.orderBy(ord: _*)))
       .withColumn("__dup",

@@ -289,7 +289,7 @@ private[search] trait QueryDslEndpoints { this: QueryDsl.type =>
             .select(col(idField), a.score.as("__s"))
             .orderBy(col("__s").desc, col(idField))
             .limit(win)
-            // the window input is the ≤win-row limited set — bounded
+            // window bound: ≤ window_size (≤ 1000) rows, the limit above
             .select(col(idField),
               row_number().over(Window.orderBy(col("__s").desc, col(idField)))
                 .cast("long").as(s"rank_${i + 1}"))
@@ -712,6 +712,7 @@ private[search] trait QueryDslEndpoints { this: QueryDsl.type =>
         val aggCols = group.map(t => count(when(t.pred, 1L)).as(s"__n${t.i}"))
         val g = table.groupBy(col(field).cast("string").as("__k"))
           .agg(aggCols.head, aggCols.tail: _*)
+        // window bound: none — one row per distinct `field` value
         val ranked = group.foldLeft(g) { (d, t) =>
           d.withColumn(s"__r${t.i}", row_number().over(
             Window.orderBy(col(s"__n${t.i}").desc, col("__k"))).cast("long"))

@@ -963,6 +963,7 @@ private[search] trait QueryDslRequests { this: QueryDsl.type =>
     val scored = pairs.join(broadcast(hit), Seq("w1", "w2"), "left")
       .withColumn("bcount", coalesce(col("bcount"), lit(0L)))
       .withColumn("dist", col("d1") + col("d2"))
+    // window bound: ≤ perPos² candidate pairs (the broadcast cross product)
     val wAll = Window.orderBy(
       col("bcount").desc, col("dist"), col("w1"), col("w2"))
     scored.withColumn("rank", row_number().over(wAll).cast("long"))
@@ -1328,6 +1329,7 @@ private[search] trait QueryDslRequests { this: QueryDsl.type =>
                 col("__fetched") === lit(kFetch.toLong),
               raise_error(lit(err)).cast("boolean"))
               .otherwise(col("__knn_fid").isNotNull))
+            // window bound: ≤ kFetch (≤ 1e6) over-fetched candidates
             .withColumn("rank", row_number().over(
               Window.orderBy(col("sim").desc, col("neighbor_id"))).cast("long"))
             .filter(col("rank") <= k)
@@ -1355,7 +1357,7 @@ private[search] trait QueryDslRequests { this: QueryDsl.type =>
       .select(col(idF), col("sim"))
       .orderBy(col("sim").desc, col(idF))
       .limit(k)
-      // rank over the already-bounded k rows only
+      // window bound: ≤ k rows, the limit above
       .withColumn("rank",
         row_number().over(Window.orderBy(col("sim").desc, col(idF))).cast("long"))
       .select(col(idF), col("rank"), col("sim"))

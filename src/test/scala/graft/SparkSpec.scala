@@ -12,20 +12,8 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      // same rationale as GraftSession: Spark 4.1's union-partitioning
-      // propagation mis-claims partition counts (see BulkBodySpec's
-      // chained-applyBatch regression pin)
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The shipped session (`GraftSession`) on 4 cores: the suites'
+    * partition counts assume `local[4]` and 4 shuffle partitions.
+    */
+  lazy val session: SparkSession = GraftSession.get("4")
 }

@@ -313,4 +313,22 @@ class SearchIndexSpec extends SparkSpec {
       "merge after a stats-losing crash must recover and stay correct")
     docs.unpersist()
   }
+
+  test("a stats rename that does not take effect fails the build; the next serve recovers") {
+    import graft.streaming.FailRenameFs
+    val docs = Tables.load(spark, sf(), "documents").filter(col("doc_id") < 300)
+      .persist()
+    FailRenameFs.registered(spark.sparkContext.hadoopConfiguration) {
+      val dir = "failrename://" +
+        java.nio.file.Files.createTempDirectory("bm25rename") + "/idx"
+      val err = FailRenameFs.failing("stats") {
+        intercept[java.io.IOException](SearchIndex.build(docs, "doc_id", "text", dir))
+      }
+      assert(err.getMessage.contains("stats"), err.getMessage)
+      assert(SearchIndex.bm25(spark, dir, terms).as[(Long, Double)].collect().toSeq
+        === direct(docs),
+        "the temp-write + recoverStatsIfMissing contract must still repair stats/")
+    }
+    docs.unpersist()
+  }
 }

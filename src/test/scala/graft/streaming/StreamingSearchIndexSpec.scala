@@ -95,26 +95,20 @@ class StreamingSearchIndexSpec extends SparkSpec {
   }
 
   test("a marker rename that does not take effect fails the commit; the restart guard still holds") {
-    val conf = spark.sparkContext.hadoopConfiguration
-    conf.set("fs.failrename.impl", classOf[FailMarkerRenameFs].getName)
-    conf.setBoolean("fs.failrename.impl.disable.cache", true)
-    try {
+    FailRenameFs.registered(spark.sparkContext.hadoopConfiguration) {
       val dir = "failrename://" + Files.createTempDirectory("ssidx-rename") + "/idx"
       val deletes = Seq((5L, null: String, "delete")).toDF("doc_id", "text", "_action")
       def epoch(e: Long): Unit =
         StreamingSearchIndex.processTextBatch(deletes, "doc_id", "text", dir, epoch = e)
       epoch(0L); epoch(1L)
       assert(StreamingSearchIndex.lastApplied(spark, dir) === Some(1L))
-      FailMarkerRenameFs.failing = true
-      try intercept[java.io.IOException](epoch(2L))
-      finally FailMarkerRenameFs.failing = false
+      FailRenameFs.failing("_applied_epoch") {
+        intercept[java.io.IOException](epoch(2L))
+      }
       // the stream restarted with a cleared checkpoint must still be
       // refused, not re-apply history onto the live index
       val stale = intercept[IllegalStateException](epoch(0L))
       assert(stale.getMessage.contains("fresh checkpoint"), stale.getMessage)
-    } finally {
-      conf.unset("fs.failrename.impl")
-      conf.unset("fs.failrename.impl.disable.cache")
     }
   }
 
@@ -282,18 +276,35 @@ class StreamingSearchIndexSpec extends SparkSpec {
 }
 
 /** The local filesystem under the `failrename` scheme, whose rename
-  * onto an `_applied_epoch` marker reports `false` while `failing` is
+  * onto a path named `FailRenameFs.target` reports `false` while it is
   * set — the way Hadoop clients report most rename failures.
   */
-class FailMarkerRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+class FailRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getScheme: String = "failrename"
   override def getUri: java.net.URI = java.net.URI.create("failrename:///")
   override def rename(src: org.apache.hadoop.fs.Path,
       dst: org.apache.hadoop.fs.Path): Boolean =
-    if (FailMarkerRenameFs.failing && dst.getName == "_applied_epoch") false
+    if (dst.getName == FailRenameFs.target) false
     else super.rename(src, dst)
 }
 
-object FailMarkerRenameFs {
-  @volatile var failing = false
+object FailRenameFs {
+  @volatile var target: String = null
+
+  /** Runs `body` with the scheme registered in `conf`. */
+  def registered[T](conf: org.apache.hadoop.conf.Configuration)(body: => T): T = {
+    conf.set("fs.failrename.impl", classOf[FailRenameFs].getName)
+    conf.setBoolean("fs.failrename.impl.disable.cache", true)
+    try body
+    finally {
+      conf.unset("fs.failrename.impl")
+      conf.unset("fs.failrename.impl.disable.cache")
+    }
+  }
+
+  /** Runs `body` while renames onto `name` fail. */
+  def failing[T](name: String)(body: => T): T = {
+    target = name
+    try body finally target = null
+  }
 }

@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local replica of the driver's correctness gate: for each query dumped
 by graft.Verify, run its oracle SQL in DuckDB over the same parquet
-tables and compare (columns sorted by name, exact values)."""
+tables and compare (columns sorted by name, exact values). Each query
+graft.Verify lists in failed_queries.txt (it threw, so its dump is
+missing or stale) counts as a failure."""
 import sys, json, glob, os
 import duckdb
 
@@ -14,7 +16,14 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem","ev
 
 oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 names = sorted([os.path.basename(p) for p in glob.glob(f"{out_dir}/*") if os.path.isdir(p)])
+failed_path = f"{out_dir}/failed_queries.txt"
+failed = set()
+if os.path.exists(failed_path):
+    failed = {l.strip() for l in open(failed_path) if l.strip()}
 fail = 0
+for name in sorted(failed):
+    print(f"[VERIFY-FAIL] {name}: threw in graft.Verify"); fail += 1
+names = [n for n in names if n not in failed]
 for name in names:
     try:
         got = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'").df()
@@ -55,5 +64,5 @@ for name in names:
         print(f"[VALUES] {name}: col={c} row={i} got={x!r} exp={y!r}"); fail += 1
     else:
         print(f"[OK] {name}: {len(got)} rows")
-print(f"\n{'FAIL ' + str(fail) if fail else 'ALL OK'} / {len(names)} queries")
+print(f"\n{'FAIL ' + str(fail) if fail else 'ALL OK'} / {len(names) + len(failed)} queries")
 sys.exit(1 if fail else 0)
