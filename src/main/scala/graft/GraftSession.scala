@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The one session factory, with the engine's scale-oriented defaults.
   *
   * Every session the engine runs under is built here: `Verify` (the
-  * oracle dump), `Bench`, `ScaleBench`, `ThroughputBench`, the test
-  * suites (`SparkSpec`) and perfbench. So the oracle gate and the tests
+  * oracle dump), `Bench`, `ScaleBench`, the test suites (`SparkSpec`)
+  * and perfbench. So the oracle gate and the tests
   * check the same configuration and extensions that the benchmarks time.
   * A caller varies only the core count.
   *

@@ -3,6 +3,8 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.TouchedLeaves
+
 /** Materialized full-text (BM25) search index — the persisted artifact
   * the reference pipeline's OpenSearch sink actually maintains (every
   * bulk-indexed document updates OpenSearch's inverted lists and
@@ -30,7 +32,8 @@ import org.apache.spark.sql.functions._
   * [[graft.operators.IvfIndex.mergeCdcBatch]]: locate the batch ids'
   * existing postings with a column-pruned (doc_id, tbucket) scan,
   * rewrite ONLY touched term buckets (old buckets ∪ the new terms'
-  * buckets) via dynamic partition overwrite, same for the doc buckets.
+  * buckets) through [[graft.sources.TouchedLeaves]], same for the doc
+  * buckets.
   * Write amplification is per-touched-bucket, so batch CDC ticks
   * (many docs per merge) amortize exactly like any segment-merging
   * index.
@@ -282,18 +285,17 @@ object SearchIndex {
       val newT = newPost.select(col("tbucket").cast("int")).distinct()
         .collect().map(_.getInt(0))
       val touched = (oldT ++ newT).distinct.sorted
-      if (touched.nonEmpty)
-        overwriteBuckets(spark, s"$dir/postings", "tbucket", touched,
-          spark.read.parquet(s"$dir/postings")
-            .filter(col("tbucket").isin(touched.map(c => c: Any): _*))
-            .select(col("term"), col("doc_id").cast("long"), col("dl"),
-              col("tf"), col("tbucket").cast("int"))
-            // repair compaction-crash duplicates while this bucket is
-            // being rewritten anyway (the serve path also tolerates them)
-            .dropDuplicates("term", "doc_id")
-            .join(broadcast(ids), Seq("doc_id"), "left_anti")
-            .unionByName(newPost.select(col("term"), col("doc_id"), col("dl"),
-              col("tf"), col("tbucket").cast("int"))))
+      TouchedLeaves.overwrite(s"$dir/postings", "tbucket", touched,
+        spark.read.parquet(s"$dir/postings")
+          .filter(col("tbucket").isin(touched.map(c => c: Any): _*))
+          .select(col("term"), col("doc_id").cast("long"), col("dl"),
+            col("tf"), col("tbucket").cast("int"))
+          // repair compaction-crash duplicates while this bucket is
+          // being rewritten anyway (the serve path also tolerates them)
+          .dropDuplicates("term", "doc_id")
+          .join(broadcast(ids), Seq("doc_id"), "left_anti")
+          .unionByName(newPost.select(col("term"), col("doc_id"), col("dl"),
+            col("tf"), col("tbucket").cast("int"))))
 
       // doc table: dbucket is a pure function of doc_id — no scan
       // needed to locate old versions
@@ -304,46 +306,17 @@ object SearchIndex {
       val touchedD = ids
         .select(pmod(col("doc_id"), lit(nb.toLong)).cast("long").as("b"))
         .distinct().collect().map(_.getLong(0))
-      if (touchedD.nonEmpty)
-        overwriteBuckets(spark, s"$dir/docs", "dbucket",
-          touchedD.sorted.map(_.toString),
-          spark.read.parquet(s"$dir/docs")
-            .filter(col("dbucket").isin(touchedD.map(c => c: Any): _*))
-            .select(col("doc_id").cast("long"), col("dl"),
-              col("dbucket").cast("long"))
-            .dropDuplicates("doc_id")
-            .join(broadcast(ids), Seq("doc_id"), "left_anti")
-            .unionByName(newDocs))
+      TouchedLeaves.overwrite(s"$dir/docs", "dbucket", touchedD.sorted,
+        spark.read.parquet(s"$dir/docs")
+          .filter(col("dbucket").isin(touchedD.map(c => c: Any): _*))
+          .select(col("doc_id").cast("long"), col("dl"),
+            col("dbucket").cast("long"))
+          .dropDuplicates("doc_id")
+          .join(broadcast(ids), Seq("doc_id"), "left_anti")
+          .unionByName(newDocs))
 
       writeStats(spark, dir, nb, an.name)
     } finally newPost.unpersist()
-  }
-
-  /** Dynamic-partition-overwrite of the touched buckets, with explicit
-    * deletion of buckets the rewrite empties (dynamic overwrite skips
-    * partitions that produce no rows).
-    */
-  private def overwriteBuckets(spark: SparkSession, path: String,
-      partCol: String, touched: Seq[Any], replacement: DataFrame): Unit = {
-    val repl = replacement.localCheckpoint(true) // plan reads what we overwrite
-    try {
-      val conf = spark.conf
-      val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try repl.write.mode("overwrite").partitionBy(partCol).parquet(path)
-      finally prev match {
-        case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
-      val still = repl.select(col(partCol).cast("string")).distinct()
-        .collect().map(_.getString(0)).toSet
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      touched.map(_.toString).filterNot(still).foreach { b =>
-        val p = new org.apache.hadoop.fs.Path(s"$path/$partCol=$b")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    } finally repl.unpersist()
   }
 
   /** BM25 top-k served from the index alone: a stats read, a

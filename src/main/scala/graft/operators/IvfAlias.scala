@@ -113,23 +113,21 @@ object IvfAlias {
     val spark = embeddings.sparkSession
     val n = nextVersion(spark, root)
     IvfIndex.writeIndex(embeddings, idCol, embCol, p, s"$root/v$n", payloadCols)
-    val fs = fsOf(spark, root)
-    val clusters = fs.listStatus(new Path(s"$root/v$n/data")).toSeq.collect {
-      case s if s.isDirectory && s.getPath.getName.startsWith("cluster=") =>
-        s.getPath.getName.stripPrefix("cluster=").toInt
-    }
-    writeMap(spark, root, n, n, clusters.map(_ -> n).toMap)
-    VersionPointer.commit(fs, root, "_active", s"v$n")
+    writeMap(spark, root, n, n, hostedClusters(spark, root, n).map(_ -> n).toMap)
+    VersionPointer.commit(fsOf(spark, root), root, "_active", s"v$n")
     n
   }
 
-  /** The layout's payload columns (from any hosted cluster's files). */
-  private def payloadsOf(spark: SparkSession, root: String,
-      centVer: Int, cmap: Map[Int, Int]): Seq[String] =
-    cmap.headOption.map { case (c, hv) =>
-      spark.read.parquet(s"$root/v$hv/data/cluster=$c").schema.names.toSeq
-        .filterNot(Set("id", "unit_vec"))
-    }.getOrElse(Seq.empty)
+  /** The clusters version `v` wrote a `data/cluster=` directory for. */
+  private def hostedClusters(spark: SparkSession, root: String, v: Int): Seq[Int] = {
+    val data = new Path(s"$root/v$v/data")
+    val fs = fsOf(spark, root)
+    if (!fs.exists(data)) Nil
+    else fs.listStatus(data).toSeq.collect {
+      case s if s.isDirectory && s.getPath.getName.startsWith("cluster=") =>
+        s.getPath.getName.stripPrefix("cluster=").toInt
+    }
+  }
 
   /** Read `clusters` through the map — each cluster from its hosting
     * version's directory, the partition value re-attached (path
@@ -153,61 +151,26 @@ object IvfAlias {
     */
   def merge(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, embCol: String, actionCol: String = "_action"): Int = {
-    import spark.implicits._
-    val active = activeVersion(spark, root)
-    val (centVer, cmap) = readMap(spark, root, active)
-    val cents: Array[Array[Double]] =
-      spark.read.parquet(s"$root/v$centVer/centroids")
-        .select(col("cluster").cast("int"), col("centroid"))
-        .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-    val bc = spark.sparkContext.broadcast(cents)
-
-    val payloads = payloadsOf(spark, root, centVer, cmap)
-    payloads.find(!batch.columns.contains(_)).foreach(c =>
-      throw new IllegalArgumentException(
-        s"the store at $root carries payload column '$c' but the CDC " +
-          s"batch does not (batch columns: ${batch.columns.mkString(", ")})"))
-
-    val ids = batch.select(col(idCol).cast("long").as("id"))
-    val oldClusters = readClusters(spark, root, cmap, cmap.keys.toSeq)
-      .map(_.select(col("id").cast("long"), col("cluster"))
-        .join(broadcast(ids), Seq("id"), "left_semi")
-        .select(col("cluster")).distinct().as[Int].collect().toSeq)
-      .getOrElse(Seq.empty)
-
-    val assigned = IvfIndex.layoutRows(
-        batch.filter(col(actionCol) === "upsert"), idCol, embCol, payloads, bc)
-      .localCheckpoint(true)
-    try {
-      val newClusters = assigned.select(col("cluster")).distinct()
-        .as[Int].collect().toSeq
-      val touched = (oldClusters ++ newClusters).distinct.sorted
-      val n = nextVersion(spark, root)
-      val replacement = readClusters(spark, root, cmap, touched)
-        .map(_.select((Seq(col("id").cast("long"), col("unit_vec"),
-            col("cluster").cast("int")) ++ payloads.map(c => col(s"`$c`"))): _*)
-          .dropDuplicates("id")
-          .join(broadcast(ids), Seq("id"), "left_anti")
-          .unionByName(assigned))
-        .getOrElse(assigned)
-      if (touched.nonEmpty)
-        replacement.write.mode("overwrite").partitionBy("cluster")
-          .parquet(s"$root/v$n/data")
-      // copy the (tiny, nlist×dims) centroids forward so a superseded
-      // full-build version is not kept alive forever just for them —
-      // exact doubles round-trip parquet bit-for-bit (the layout
-      // contract), so serving math is unchanged
-      spark.read.parquet(s"$root/v$centVer/centroids")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/v$n/centroids")
-      val stillThere: Set[Int] =
-        if (touched.isEmpty) Set.empty
-        else replacement.select(col("cluster")).distinct().as[Int].collect().toSet
-      val newMap = (cmap -- touched.filterNot(stillThere)) ++
-        touched.filter(stillThere).map(_ -> n)
-      writeMap(spark, root, n, n, newMap)
-      VersionPointer.commit(fsOf(spark, root), root, "_active", s"v$n")
-      n
-    } finally assigned.unpersist()
+    val (centVer, cmap) = readMap(spark, root, activeVersion(spark, root))
+    IvfIndex.mergeBatch(spark, root, s"$root/v$centVer/centroids",
+        readClusters(spark, root, cmap, _), batch, idCol, embCol, actionCol) {
+      (touched, rows) =>
+        val n = nextVersion(spark, root)
+        if (touched.nonEmpty)
+          rows.write.mode("overwrite").partitionBy("cluster")
+            .parquet(s"$root/v$n/data")
+        // copy the (tiny, nlist×dims) centroids forward so a superseded
+        // full-build version is not kept alive forever just for them —
+        // exact doubles round-trip parquet bit-for-bit (the layout
+        // contract), so serving math is unchanged
+        spark.read.parquet(s"$root/v$centVer/centroids")
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/v$n/centroids")
+        // a touched cluster the rewrite emptied has no directory in v$n
+        val newMap = (cmap -- touched) ++ hostedClusters(spark, root, n).map(_ -> n)
+        writeMap(spark, root, n, n, newMap)
+        VersionPointer.commit(fsOf(spark, root), root, "_active", s"v$n")
+        n
+    }
   }
 
   /** Serve approximate top-k against the ACTIVE map, or against a
@@ -225,10 +188,7 @@ object IvfAlias {
       case Some(pt) => (pt.centroidsVersion, pt.clusterMap)
       case None => readMap(spark, root, activeVersion(spark, root))
     }
-    val cents: Array[Array[Double]] =
-      spark.read.parquet(s"$root/v$centVer/centroids")
-        .select(col("cluster").cast("int"), col("centroid"))
-        .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+    val cents = IvfIndex.centroids(spark, s"$root/v$centVer/centroids")
     val qs = AnnTopK.boundedQueryCollect(
       IvfIndex.unitVectors(queries, idCol, embCol, lit(true))
         .map(t => (t._1, t._2)).take(maxQueries + 1),

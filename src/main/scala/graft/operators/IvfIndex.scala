@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.sources.TouchedLeaves
 
 /** IVF (inverted-file) approximate nearest neighbor with a *trained*
   * coarse quantizer — spherical k-means, the classic FAISS-style scale
@@ -192,10 +194,11 @@ object IvfIndex {
   /** The payload columns a layout carries (everything beyond the
     * reserved trio) — the columns a DSL `knn` filter may reference.
     */
-  private[graft] def layoutPayloadCols(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Seq[String] =
-    spark.read.parquet(s"$dir/data").schema.names.toSeq
-      .filterNot(LayoutCols)
+  private[graft] def layoutPayloadCols(spark: SparkSession, dir: String): Seq[String] =
+    payloadCols(spark.read.parquet(s"$dir/data"))
+
+  private def payloadCols(layout: DataFrame): Seq[String] =
+    layout.columns.toSeq.filterNot(LayoutCols)
 
   def writeIndex(embeddings: DataFrame, idCol: String, embCol: String,
       p: Params, dir: String, payloadCols: Seq[String] = Nil): Unit = {
@@ -257,86 +260,80 @@ object IvfIndex {
     *    (id, cluster) columns of the layout (column-pruned scan,
     *    broadcast semi-join against the batch);
     *  - rewriting reads ONLY the touched cluster partitions (partition
-    *    -pruned scan) and overwrites ONLY those partitions (dynamic
-    *    partition overwrite); untouched clusters' files are never read
-    *    or listed into the rewrite.
+    *    -pruned scan) and overwrites ONLY those partitions
+    *    ([[graft.sources.TouchedLeaves]]); untouched clusters' files are
+    *    never read or listed into the rewrite.
     *
     * Crash/replay: the rewrite is a pure function of
     * (current layout, batch), so replaying a half-committed epoch
     * converges — same contract as [[graft.streaming.DeltaCdc]].
-    * Partitions whose content becomes empty are deleted explicitly
-    * (dynamic overwrite skips partitions with no output rows).
     */
-  def mergeCdcBatch(spark: org.apache.spark.sql.SparkSession, dir: String,
+  def mergeCdcBatch(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, embCol: String,
-      actionCol: String = "_action"): Unit = {
+      actionCol: String = "_action"): Unit =
+    mergeBatch(spark, dir, s"$dir/centroids",
+        cs => Some(spark.read.parquet(s"$dir/data")
+          .filter(col("cluster").isin(cs.map(c => c: Any): _*))),
+        batch, idCol, embCol, actionCol) { (touched, rows) =>
+      TouchedLeaves.overwrite(s"$dir/data", "cluster", touched, rows)
+    }
+
+  /** The CDC merge of an IVF layout up to its write, one body for the
+    * in-place layout ([[mergeCdcBatch]]) and the versioned store
+    * ([[IvfAlias.merge]]). It reads the centroids at `centroidsPath`,
+    * fails loud before any write when the batch lacks one of the
+    * layout's payload columns, finds the clusters holding the batch ids
+    * with an (id, cluster) scan, assigns the upserts to the nearest
+    * existing centroid, and builds the replacement of the touched
+    * clusters: their rows deduped on id (compaction-crash duplicates
+    * are repaired while rewriting), minus the batch ids, plus the
+    * assigned rows. `read` gives the named clusters' rows, `cluster`
+    * included, or None when the layout holds none of them. `write`
+    * gets the sorted touched clusters and their replacement rows.
+    */
+  private[operators] def mergeBatch[T](spark: SparkSession, layout: String,
+      centroidsPath: String, read: Seq[Int] => Option[DataFrame],
+      batch: DataFrame, idCol: String, embCol: String, actionCol: String)(
+      write: (Seq[Int], DataFrame) => T): T = {
     import spark.implicits._
-    val cents: Array[Array[Double]] = spark.read.parquet(s"$dir/centroids")
-      .select(col("cluster").cast("int"), col("centroid"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
-    val bc = spark.sparkContext.broadcast(cents)
-
-    val ids = batch.select(col(idCol).cast("long").as("id"))
-    // clusters currently holding any batch id: (id, cluster) columns only
-    val oldClusters = spark.read.parquet(s"$dir/data")
-      .select(col("id").cast("long"), col("cluster").cast("int"))
-      .join(broadcast(ids), Seq("id"), "left_semi")
-      .select(col("cluster")).distinct().as[Int].collect()
-
-    // a payload-carrying layout (r16) requires the batch to supply the
-    // SAME payload columns — a merge that silently dropped them would
-    // break every later filtered probe
-    val payloads = layoutPayloadCols(spark, dir)
+    val cents = centroids(spark, centroidsPath)
+    val all = read(cents.indices)
+    val payloads = all.map(payloadCols).getOrElse(Nil)
     payloads.find(!batch.columns.contains(_)).foreach(c =>
       throw new IllegalArgumentException(
-        s"the layout at $dir carries payload column '$c' but the CDC " +
+        s"the layout at $layout carries payload column '$c' but the CDC " +
           s"batch does not (batch columns: ${batch.columns.mkString(", ")})"))
 
+    val ids = batch.select(col(idCol).cast("long").as("id"))
+    val oldClusters = all.map(_.select(col("id").cast("long"), col("cluster").cast("int"))
+        .join(broadcast(ids), Seq("id"), "left_semi")
+        .select(col("cluster")).distinct().as[Int].collect().toSeq)
+      .getOrElse(Nil)
     val assigned = layoutRows(batch.filter(col(actionCol) === "upsert"),
-        idCol, embCol, payloads, bc)
-      // read twice (touched-cluster collect + rewrite union) and the
-      // rewrite must not re-run the assignment against a layout the
-      // write is replacing
+        idCol, embCol, payloads, spark.sparkContext.broadcast(cents))
+      // read twice (touched-cluster collect + replacement) and must not
+      // re-run the assignment against a layout the write is replacing
       .localCheckpoint(true)
     try {
-      val newClusters = assigned.select(col("cluster")).distinct()
-        .as[Int].collect()
+      val newClusters = assigned.select(col("cluster")).distinct().as[Int].collect()
       val touched = (oldClusters ++ newClusters).distinct.sorted
-      if (touched.nonEmpty) {
-        val replacement = spark.read.parquet(s"$dir/data")
-          .filter(col("cluster").isin(touched.map(c => c: Any): _*))
-          .select((Seq(col("id").cast("long"), col("unit_vec"),
+      val rows = read(touched).fold(assigned)(
+        _.select((Seq(col("id").cast("long"), col("unit_vec"),
             col("cluster").cast("int")) ++ payloads.map(c => col(s"`$c`"))): _*)
-          // repair compaction-crash duplicates while rewriting anyway
           .dropDuplicates("id")
           .join(broadcast(ids), Seq("id"), "left_anti")
-          .unionByName(assigned)
-          // sever lineage: the plan reads the partitions the write below
-          // overwrites
-          .localCheckpoint(true)
-        try {
-          val conf = spark.conf
-          val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-          conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          try {
-            replacement.write.mode("overwrite").partitionBy("cluster")
-              .parquet(s"$dir/data")
-          } finally prev match {
-            case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-            case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-          }
-          // dynamic overwrite skips now-empty partitions: delete them
-          val stillThere = replacement.select(col("cluster")).distinct()
-            .as[Int].collect().toSet
-          val root = new org.apache.hadoop.fs.Path(s"$dir/data")
-          val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          touched.filterNot(stillThere).foreach { c =>
-            val p = new org.apache.hadoop.fs.Path(s"$dir/data/cluster=$c")
-            if (fs.exists(p)) fs.delete(p, true)
-          }
-        } finally replacement.unpersist()
-      }
+          .unionByName(assigned))
+      write(touched, rows)
     } finally assigned.unpersist()
+  }
+
+  /** The centroids table at `path`, ordered by cluster id. */
+  private[operators] def centroids(spark: SparkSession,
+      path: String): Array[Array[Double]] = {
+    import spark.implicits._
+    spark.read.parquet(path)
+      .select(col("cluster").cast("int"), col("centroid"))
+      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
   }
 
   /** Serve approximate top-k against a [[writeIndex]] layout, reading
@@ -352,9 +349,7 @@ object IvfIndex {
       p: Params = Params(), maxQueries: Int = 4096,
       filter: Option[org.apache.spark.sql.Column] = None): DataFrame = {
     import spark.implicits._
-    val cents: Array[Array[Double]] = spark.read.parquet(s"$dir/centroids")
-      .select(col("cluster").cast("int"), col("centroid"))
-      .as[(Int, Array[Double])].collect().sortBy(_._1).map(_._2)
+    val cents = centroids(spark, s"$dir/centroids")
     val qs = AnnTopK.boundedQueryCollect(
       unitVectors(queries, idCol, embCol, lit(true))
         .map(t => (t._1, t._2)).take(maxQueries + 1),

@@ -21,8 +21,9 @@ package graft.search
   * `maxQueued` at the same order — each waiter adds at most one
   * service time to the tail, so p95 stays within ~(1 + queue/permits)×
   * of the saturated-but-ungated level. The gate is engine-agnostic
-  * (wraps any `=> T`); the serving layer applies it per request —
-  * see ThroughputBench's gated N=32 row and `throughput_last.json`.
+  * (wraps any `=> T`); the serving layer applies it per request. The
+  * measured gated and ungated N=32 rows are kept in
+  * `throughput_last.json`.
   */
 final class ServingGate(maxConcurrent: Int, maxQueued: Int) {
   require(maxConcurrent >= 1, s"maxConcurrent must be >= 1 (got $maxConcurrent)")

@@ -3,13 +3,15 @@ package graft.streaming
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Small-files compaction for the streaming dedup stores. Every epoch
-  * of [[StreamingDedup]] / [[StreamingSemanticDedup]] appends one
-  * parquet file-set per touched partition; after 10⁴ epochs a probe
-  * would open 10⁴ tiny files per bucket. This helper rewrites any
-  * store directory (the unpartitioned root, or each one-level `k=v`
-  * partition leaf) holding more than `maxFiles` part files into a
-  * single file.
+/** Small-files compaction for the stream-maintained stores: the two
+  * dedup stores ([[StreamingDedup]], [[StreamingSemanticDedup]]), whose
+  * every epoch appends one parquet file-set per touched partition, and
+  * the BM25 and IVF index layouts [[StreamingSearchIndex]] maintains,
+  * whose every merge rewrites a touched leaf as up to one file per
+  * write task. After 10⁴ epochs a probe would open 10⁴ tiny files per
+  * bucket. This helper rewrites any store directory (the unpartitioned
+  * root, or each one-level `k=v` partition leaf) holding more than
+  * `maxFiles` part files into a single file.
   *
   * Crash-safety protocol — '''write-then-delete''', no transaction
   * log needed:
@@ -22,10 +24,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  3. delete the doomed set.
   *
   * A crash between 2 and 3 leaves every row present TWICE — never
-  * absent. That is tolerated by construction in all three stores: the
+  * absent. That is tolerated by construction in every store: the
   * accepted corpora feed id anti-joins and ≥-threshold probe joins
-  * (duplicates change nothing), and the band index feeds a candidate
-  * join that `.distinct()`s before verification. The next compaction
+  * (duplicates change nothing), the band index feeds a candidate join
+  * that `.distinct()`s before verification, and the index layouts'
+  * serve paths and merges drop duplicate keys. The next compaction
   * pass then repairs the duplication via the operator's `rewrite`
   * hook (dropDuplicates on the store's key). Single-writer contract:
   * run from the stream's own `foreachBatch` thread (epochs are

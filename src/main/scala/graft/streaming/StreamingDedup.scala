@@ -43,12 +43,13 @@ import graft.operators.MinHashLsh
   * O(batch × bands) plus the pruned verification joins.
   *
   * CDC maintenance ([[mergeCdcBatch]]): deletes and replaced versions
-  * become epoch-sequenced tombstones ([[liveAccepted]] is the
-  * reader's view); [[compactStores]] purges dead rows physically —
-  * the LSM write path, chosen because a doc's band rows live in every
-  * band partition and an eager delete would rewrite the whole index.
+  * become epoch-sequenced tombstones ([[TombstoneLayer]];
+  * [[liveAccepted]] is the reader's view); [[compactStores]] purges
+  * dead rows physically — the LSM write path, chosen because a doc's
+  * band rows live in every band partition and an eager delete would
+  * rewrite the whole index.
   */
-object StreamingDedup {
+object StreamingDedup extends TombstoneLayer {
 
   def start(docs: DataFrame, idCol: String, textCol: String,
       acceptedPath: String, indexPath: String, checkpoint: String,
@@ -63,42 +64,6 @@ object StreamingDedup {
           compactStores(batch.sparkSession, acceptedPath, indexPath, idCol): Unit
       }
       .start()
-
-  /** Side-table of (id, `_tomb_epoch`) deletions. Lives INSIDE the
-    * accepted directory under an underscore name, which parquet
-    * readers skip — so `spark.read.parquet(acceptedPath)` and the
-    * tombstones never mix.
-    */
-  private def tombstonesPath(acceptedPath: String) = s"$acceptedPath/_tombstones"
-
-  private def exists(spark: org.apache.spark.sql.SparkSession,
-      p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** The LIVE accepted corpus: rows whose acceptance `_epoch` is ≥
-    * their id's latest tombstone epoch. Accepts win ties so a
-    * replayed upsert epoch (tombstone + re-admit at the same epoch)
-    * converges instead of hiding its own write. Stores written before
-    * CDC maintenance existed (no `_epoch` column) count as epoch 0.
-    */
-  def liveAccepted(spark: org.apache.spark.sql.SparkSession,
-      acceptedPath: String, idCol: String): DataFrame = {
-    val acc0 = spark.read.option("mergeSchema", "true").parquet(acceptedPath)
-    val acc =
-      if (acc0.columns.contains("_epoch")) acc0
-      else acc0.withColumn("_epoch", lit(0L))
-    val tp = tombstonesPath(acceptedPath)
-    if (!exists(spark, tp)) acc
-    else {
-      val ts = spark.read.parquet(tp)
-        .groupBy(col(idCol)).agg(max(col("_tomb_epoch")).as("_te"))
-      acc.join(ts, Seq(idCol), "left")
-        .filter(col("_te").isNull || coalesce(col("_epoch"), lit(0L)) >= col("_te"))
-        .drop("_te")
-    }
-  }
 
   /** CDC maintenance of the dedup stores — upsert/delete with the same
     * batch contract as [[graft.etl.CdcMerge]] (one row per key,
@@ -120,8 +85,7 @@ object StreamingDedup {
       acceptedPath: String, indexPath: String, epoch: Long,
       threshold: Double = 0.8, bands: Int = 16, rows: Int = 2,
       actionCol: String = "_action"): Unit = {
-    batch.select(col(idCol), lit(epoch).as("_tomb_epoch"))
-      .write.mode("append").parquet(tombstonesPath(acceptedPath))
+    tombstone(batch, idCol, acceptedPath, epoch)
     processBatch(batch.filter(col(actionCol) === "upsert").drop(actionCol),
       idCol, textCol, acceptedPath, indexPath, threshold, bands, rows, epoch)
   }
@@ -142,28 +106,7 @@ object StreamingDedup {
       acceptedPath: String, indexPath: String, idCol: String,
       maxFiles: Int = 8): Seq[String] = {
     import org.apache.spark.sql.expressions.Window
-    val tp = tombstonesPath(acceptedPath)
-    // accepted: per-id last-writer-wins (crash duplicates and upsert
-    // residue collapse to the newest epoch), then PURGE rows dead
-    // against the tombstones — the physical half of mergeCdcBatch
-    val a = IndexCompaction.compact(spark, acceptedPath, maxFiles) { df0 =>
-      val df =
-        if (df0.columns.contains("_epoch")) df0
-        else df0.withColumn("_epoch", lit(0L))
-      val lww = df
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col(idCol)).orderBy(col("_epoch").desc)))
-        .filter(col("_rn") === 1).drop("_rn")
-      if (!exists(spark, tp)) lww
-      else {
-        val ts = spark.read.parquet(tp)
-          .groupBy(col(idCol)).agg(max(col("_tomb_epoch")).as("_te"))
-        lww.join(ts, Seq(idCol), "left")
-          .filter(col("_te").isNull ||
-            coalesce(col("_epoch"), lit(0L)) >= col("_te"))
-          .drop("_te")
-      }
-    }
+    val a = compactAccepted(spark, acceptedPath, idCol, maxFiles)
     // index: dedupe, purge rows whose doc is no longer live, refresh
     // bsize per (band, bucket) — restoring the probe-side hot-bucket
     // cap for incrementally-appended rows, whose write-time bsize is 1

@@ -13,12 +13,13 @@ import graft.sources.VersionPointer
   * reference's actual program shape: a DynamoDB stream drives an
   * OpenSearch index document-by-document, forever
   * (custom_resource.py:324-384 — stream → route → per-doc
-  * index/update/delete against the search collection). The repo
-  * already had both halves — streaming CDC loops and batch index
-  * merges ([[SearchIndex.mergeCdcBatch]], [[IvfIndex.mergeCdcBatch]]);
-  * this object composes them into `foreachBatch` drivers so the BM25
-  * text index and the IVF vector index are maintained *from the
-  * stream*, with the same replay discipline the dedup stores have.
+  * index/update/delete against the search collection). The batch
+  * index merges ([[SearchIndex.mergeCdcBatch]],
+  * [[IvfIndex.mergeCdcBatch]]) rewrite only the leaves a batch touches
+  * through the one in-place writer, [[graft.sources.TouchedLeaves]];
+  * this object drives them from `foreachBatch` so the BM25 text index
+  * and the IVF vector index are maintained *from the stream*, with the
+  * same replay discipline the dedup stores have.
   *
   * Per epoch:
   *  1. replay/restart guard: a fully-applied epoch (strictly below the

@@ -51,7 +51,7 @@ import graft.operators.SemanticDedup
   * Paths resolve through the Hadoop FileSystem API, so hdfs:///s3a://
   * corpora work identically to local runs.
   */
-object StreamingSemanticDedup {
+object StreamingSemanticDedup extends TombstoneLayer {
 
   def start(vecs: DataFrame, idCol: String, embCol: String,
       acceptedPath: String, checkpoint: String,
@@ -67,39 +67,6 @@ object StreamingSemanticDedup {
       }
       .start()
 
-  /** Side-table of (id, `_tomb_epoch`) deletions, inside the accepted
-    * directory under an underscore name parquet readers skip.
-    */
-  private def tombstonesPath(acceptedPath: String) = s"$acceptedPath/_tombstones"
-
-  private def hadoopExists(spark: org.apache.spark.sql.SparkSession,
-      p: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(hp)
-  }
-
-  /** The LIVE accepted corpus: rows whose acceptance `_epoch` is ≥
-    * their id's latest tombstone epoch (accepts win ties so replayed
-    * upsert epochs converge). Pre-CDC stores without `_epoch` count as
-    * epoch 0. Same contract as [[StreamingDedup.liveAccepted]].
-    */
-  def liveAccepted(spark: org.apache.spark.sql.SparkSession,
-      acceptedPath: String, idCol: String): DataFrame = {
-    val acc0 = spark.read.option("mergeSchema", "true").parquet(acceptedPath)
-    val acc =
-      if (acc0.columns.contains("_epoch")) acc0
-      else acc0.withColumn("_epoch", lit(0L))
-    val tp = tombstonesPath(acceptedPath)
-    if (!hadoopExists(spark, tp)) acc
-    else {
-      val ts = spark.read.parquet(tp)
-        .groupBy(col(idCol)).agg(max(col("_tomb_epoch")).as("_te"))
-      acc.join(ts, Seq(idCol), "left")
-        .filter(col("_te").isNull || coalesce(col("_epoch"), lit(0L)) >= col("_te"))
-        .drop("_te")
-    }
-  }
-
   /** CDC maintenance — the embedding-side mirror of
     * [[StreamingDedup.mergeCdcBatch]]: every batch id is tombstoned at
     * this epoch (a delete frees the id AND stops the dead vector
@@ -113,46 +80,9 @@ object StreamingSemanticDedup {
       acceptedPath: String, epoch: Long, threshold: Double = 0.9,
       signDims: Int = 4, maxBucket: Int = 8192,
       actionCol: String = "_action"): Unit = {
-    batch.select(col(idCol), lit(epoch).as("_tomb_epoch"))
-      .write.mode("append").parquet(tombstonesPath(acceptedPath))
+    tombstone(batch, idCol, acceptedPath, epoch)
     processBatch(batch.filter(col(actionCol) === "upsert").drop(actionCol),
       idCol, embCol, acceptedPath, threshold, signDims, maxBucket, epoch)
-  }
-
-  /** Rewrite accepted-corpus cid partitions that have accumulated more
-    * than `maxFiles` per-epoch file-sets into one file each
-    * ([[IndexCompaction]]'s write-then-delete protocol — a crash can
-    * only duplicate rows, which the id anti-join and ≥-threshold probe
-    * tolerate, and which the NEXT compaction repairs). Per-leaf rows
-    * collapse last-writer-wins per id, then rows dead against the
-    * tombstones are PURGED (cross-leaf staleness — an upsert that
-    * moved an id to a different cid — is handled by the tombstone
-    * filter, not the per-leaf LWW). Runs automatically every
-    * `compactEvery` epochs from [[start]]; callable directly for
-    * batch-backfilled corpora.
-    */
-  def compactAccepted(spark: org.apache.spark.sql.SparkSession,
-      acceptedPath: String, idCol: String, maxFiles: Int = 8): Seq[String] = {
-    import org.apache.spark.sql.expressions.Window
-    val tp = tombstonesPath(acceptedPath)
-    IndexCompaction.compact(spark, acceptedPath, maxFiles) { df0 =>
-      val df =
-        if (df0.columns.contains("_epoch")) df0
-        else df0.withColumn("_epoch", lit(0L))
-      val lww = df
-        .withColumn("_rn", row_number().over(
-          Window.partitionBy(col(idCol)).orderBy(col("_epoch").desc)))
-        .filter(col("_rn") === 1).drop("_rn")
-      if (!hadoopExists(spark, tp)) lww
-      else {
-        val ts = spark.read.parquet(tp)
-          .groupBy(col(idCol)).agg(max(col("_tomb_epoch")).as("_te"))
-        lww.join(ts, Seq(idCol), "left")
-          .filter(col("_te").isNull ||
-            coalesce(col("_epoch"), lit(0L)) >= col("_te"))
-          .drop("_te")
-      }
-    }
   }
 
   /** One epoch — also the batch-mode backfill entry. `idCol` must be

@@ -115,6 +115,7 @@ class ByQuerySpec extends SparkSpec {
     val p = IvfIndex.Params(nlist = 8, nprobe = 8, iters = 2, k = 5)
     val dir = java.nio.file.Files.createTempDirectory("dbqivf").toString
     IvfIndex.writeIndex(emb, "vec_id", "embedding", p, dir)
+    val before = fileState(s"$dir/data")
 
     val queries = emb.filter(col("vec_id") === 3)
       .select(col("vec_id"), col("embedding"))
@@ -131,6 +132,18 @@ class ByQuerySpec extends SparkSpec {
         "vec_id", "embedding", p)
       .select(col("neighbor_id")).as[Long].collect().toSeq
     assert(!afterTop.contains(victim) && afterTop.nonEmpty)
+
+    // the touched-cluster pin: one deleted vector lives in one cluster,
+    // so every other cluster's files must be byte-stable
+    val after = fileState(s"$dir/data")
+    val untouched = before.toSet.intersect(after.toSet).map(_._1)
+    def cluster(f: String) = f.split("/").find(_.startsWith("cluster="))
+    val hit = (before.keySet.diff(untouched) ++ after.keySet.diff(untouched))
+      .map(cluster)
+    assert(hit.size === 1, s"expected one rewritten cluster, got $hit")
+    val others = before.filter { case (f, _) => !hit(cluster(f)) }
+    assert(others.nonEmpty && others.toSet.subsetOf(after.toSet),
+      "untouched clusters must be byte-stable")
     emb.unpersist()
   }
 

@@ -331,4 +331,131 @@ class SearchIndexSpec extends SparkSpec {
     }
     docs.unpersist()
   }
+
+  test("a delete that empties a doc bucket and a term bucket removes both directories") {
+    val corpus = (1L to 8L).map(i => (i, s"spark join w$i x$i")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("bm25empty").toString
+    SearchIndex.build(corpus, "doc_id", "text", dir)
+
+    // a term bucket holding one document's postings only; with 64
+    // buckets over 8 ids that document is alone in its doc bucket too
+    val owners = spark.read.parquet(s"$dir/postings")
+      .select(col("doc_id").cast("long"), col("tbucket").cast("int"))
+      .as[(Long, Int)].collect().groupBy(_._2).view.mapValues(_.map(_._1).toSet)
+    val (tb, victim) = owners.collect { case (b, ids) if ids.size == 1 => (b, ids.head) }
+      .toSeq.minBy(_._1)
+    val db = victim % 64
+    assert(new java.io.File(s"$dir/postings/tbucket=$tb").exists())
+    assert(new java.io.File(s"$dir/docs/dbucket=$db").exists())
+
+    SearchIndex.mergeCdcBatch(spark, dir,
+      Seq((victim, null: String, "delete")).toDF("doc_id", "text", "_action"),
+      "doc_id", "text")
+    assert(!new java.io.File(s"$dir/postings/tbucket=$tb").exists(),
+      "the emptied term bucket's directory must be deleted")
+    assert(!new java.io.File(s"$dir/docs/dbucket=$db").exists(),
+      "the emptied doc bucket's directory must be deleted")
+
+    val rebuilt = java.nio.file.Files.createTempDirectory("bm25empty_re").toString
+    SearchIndex.build(corpus.filter(col("doc_id") =!= victim), "doc_id", "text", rebuilt)
+    val q = Seq("spark", "join", s"w$victim", s"x$victim", "w1", "x2")
+    assert(SearchIndex.bm25(spark, dir, q).as[(Long, Double)].collect().toSeq
+      === SearchIndex.bm25(spark, rebuilt, q).as[(Long, Double)].collect().toSeq)
+  }
+
+  test("a merge never changes the session's partitionOverwriteMode") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val mode = spark.conf.get(key)
+    val docs = Tables.load(spark, sf(), "documents").filter(col("doc_id") < 300)
+      .persist()
+    BlockCreateFs.registered(spark.sparkContext.hadoopConfiguration) {
+      val dir = "blockcreate://" +
+        java.nio.file.Files.createTempDirectory("bm25mode") + "/idx"
+      SearchIndex.build(docs.filter(col("doc_id") < 200), "doc_id", "text", dir)
+      val batch = docs.filter(col("doc_id") >= 200)
+        .select(col("doc_id"), col("text"), lit("upsert").as("_action"))
+      // read the conf while the merge's postings write is in flight
+      val during = BlockCreateFs.whileCreating("postings")(
+        SearchIndex.mergeCdcBatch(spark, dir, batch, "doc_id", "text"))(
+        spark.conf.get(key))
+      assert(during === mode, "a merge must not set the mode on the session")
+      assert(spark.conf.get(key) === mode)
+      assert(SearchIndex.bm25(spark, dir, terms).as[(Long, Double)].collect().toSeq
+        === direct(docs))
+    }
+    docs.unpersist()
+  }
+}
+
+/** The local filesystem under the `blockcreate` scheme. Inside
+  * [[BlockCreateFs.whileCreating]], a `create` of a file under a
+  * directory named `target` waits until the probe has run, so a test
+  * can observe the session while a write is in flight.
+  */
+class BlockCreateFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "blockcreate"
+  override def getUri: java.net.URI = java.net.URI.create("blockcreate:///")
+  private def hold(f: org.apache.hadoop.fs.Path): Unit =
+    BlockCreateFs.gate.foreach { case (target, reached, release) =>
+      if (f.toString.contains(s"/$target/")) {
+        reached.countDown()
+        release.await(2, java.util.concurrent.TimeUnit.MINUTES)
+      }
+    }
+  override def create(f: org.apache.hadoop.fs.Path, overwrite: Boolean,
+      bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    hold(f)
+    super.create(f, overwrite, bufferSize, replication, blockSize, progress)
+  }
+  override def create(f: org.apache.hadoop.fs.Path,
+      permission: org.apache.hadoop.fs.permission.FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable)
+      : org.apache.hadoop.fs.FSDataOutputStream = {
+    hold(f)
+    super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+  }
+}
+
+object BlockCreateFs {
+  import java.util.concurrent.CountDownLatch
+
+  @volatile var gate: Option[(String, CountDownLatch, CountDownLatch)] = None
+
+  /** Runs `body` with the scheme registered in `conf`. */
+  def registered[T](conf: org.apache.hadoop.conf.Configuration)(body: => T): T = {
+    conf.set("fs.blockcreate.impl", classOf[BlockCreateFs].getName)
+    conf.setBoolean("fs.blockcreate.impl.disable.cache", true)
+    try body
+    finally {
+      conf.unset("fs.blockcreate.impl")
+      conf.unset("fs.blockcreate.impl.disable.cache")
+    }
+  }
+
+  /** Runs `write` on another thread; once it creates a file under a
+    * directory named `target`, evaluates `probe` and then lets the
+    * write go on. Returns the probe's value after the write finished.
+    */
+  def whileCreating[T](target: String)(write: => Unit)(probe: => T): T = {
+    val reached = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    gate = Some((target, reached, release))
+    val writer = scala.concurrent.Future(write)(scala.concurrent.ExecutionContext.global)
+    def finish() =
+      scala.concurrent.Await.result(writer, scala.concurrent.duration.Duration(5, "min"))
+    val seen =
+      try {
+        while (!reached.await(100, java.util.concurrent.TimeUnit.MILLISECONDS))
+          if (writer.isCompleted) {
+            finish() // rethrows the write's failure
+            throw new AssertionError(s"the write created no file under $target")
+          }
+        probe
+      } finally { release.countDown(); gate = None }
+    finish()
+    seen
+  }
 }

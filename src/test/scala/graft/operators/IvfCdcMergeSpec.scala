@@ -153,4 +153,28 @@ class IvfCdcMergeSpec extends SparkSpec {
       IvfIndex.mergeCdcBatch(spark, dir, bad, "vec_id", "embedding"))
     assert(e.getMessage.contains("payload column 'label'"), e.getMessage)
   }
+
+  test("a merge never changes the session's partitionOverwriteMode") {
+    import graft.etl.BlockCreateFs
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val mode = spark.conf.get(key)
+    val emb = Tables.load(spark, sf(), "embeddings").filter(col("vec_id") < 200)
+    val p = IvfIndex.Params(nlist = 4, nprobe = 2, iters = 2, k = 3)
+    BlockCreateFs.registered(spark.sparkContext.hadoopConfiguration) {
+      val dir = "blockcreate://" +
+        java.nio.file.Files.createTempDirectory("ivf_mode") + "/idx"
+      IvfIndex.writeIndex(emb.filter(col("vec_id") < 150), "vec_id", "embedding", p, dir)
+      val batch = emb.filter(col("vec_id") >= 150)
+        .select(col("vec_id"), col("embedding"), lit("upsert").as("_action"))
+      // read the conf while the merge's data write is in flight
+      val during = BlockCreateFs.whileCreating("data")(
+        IvfIndex.mergeCdcBatch(spark, dir, batch, "vec_id", "embedding"))(
+        spark.conf.get(key))
+      assert(during === mode, "a merge must not set the mode on the session")
+      assert(spark.conf.get(key) === mode)
+      assert(spark.read.parquet(s"$dir/data").select(col("id").cast("long"))
+        .as[Long].collect().sorted.toSeq ===
+        emb.select(col("vec_id").cast("long")).as[Long].collect().sorted.toSeq)
+    }
+  }
 }
