@@ -1,9 +1,12 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Murmur3Hash, Pmod}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types._
 
-import graft.sources.TouchedLeaves
+import graft.sources.{ArtifactCache, ServingState, TouchedLeaves}
 
 /** Materialized full-text (BM25) search index — the persisted artifact
   * the reference pipeline's OpenSearch sink actually maintains (every
@@ -56,7 +59,19 @@ object SearchIndex {
 
   import graft.search.Analyzer
 
-  private def tbucket(nb: Int) = pmod(hash(col("term")), lit(nb))
+  /** The term-bucket routing expression, `pmod(hash(term), nb)`: the
+    * build and the merge evaluate it on the `term` column, serving on
+    * a query term ([[tbucketOf]]), so routing cannot drift.
+    */
+  private def tbucketExpr(term: Expression, nb: Int): Expression =
+    new Pmod(new Murmur3Hash(Seq(term)), Literal(nb))
+
+  private def tbucket(nb: Int): Column =
+    ColumnBridge.column(tbucketExpr(ColumnBridge.expression(col("term")), nb))
+
+  /** The bucket `term`'s postings live in, evaluated on the driver. */
+  private[graft] def tbucketOf(term: String, nb: Int): Int =
+    tbucketExpr(Literal(term), nb).eval().asInstanceOf[Int]
 
   private def tokenized(docs: DataFrame, idCol: String, textCol: String,
       an: Analyzer) =
@@ -80,7 +95,7 @@ object SearchIndex {
       textCol: String, buckets: Int = 64, watch: Seq[String] = Nil,
       analyzer: String = "whitespace")(
       docs: => DataFrame): String =
-    graft.sources.ArtifactCache.cachedDir(spark, cacheKey, watch,
+    ArtifactCache.cachedDir(spark, cacheKey, watch,
       "graft_bm25_idx")(dir =>
       build(docs, idCol, textCol, dir, buckets, analyzer))
 
@@ -319,11 +334,23 @@ object SearchIndex {
     } finally newPost.unpersist()
   }
 
-  /** BM25 top-k served from the index alone: a stats read, a
-    * term-bucket-pruned postings read, and |terms| tiny aggregates —
-    * the corpus is never scanned. Bit-identical to the direct q44
-    * computation (same term order, same float-op order, same
-    * rounding), so it shares q44's oracle.
+  /** BM25 top-k served from the index alone, planned against the
+    * version's held serving state ([[graft.sources.ServingState]]):
+    *  - query terms route to their `tbucket` on the driver, through the
+    *    build's own [[tbucketExpr]] evaluated on the term;
+    *  - the stats row is held keyed on the files of `stats/`, and each
+    *    term's document frequency keyed on (its leaf's files, term) —
+    *    the terms the state lacks are counted by one collect;
+    *  - the plan reads only the routed `tbucket=` leaves, by explicit
+    *    path with the layout's fixed schema ([[TouchedLeaves.read]]),
+    *    and scores with n_docs, avgdl and df as literals.
+    *
+    * A repeat request over an unchanged version runs only its own
+    * plan; every write names its files anew, so a merged, compacted
+    * or rebuilt leaf misses the held state. The corpus is never
+    * scanned. Bit-identical to the direct q44 computation (same term
+    * order, same float-op order, same rounding), so it shares q44's
+    * oracle.
     *
     * `after` is the search_after keyset cursor over the ranking's
     * total order (score desc, doc_id asc): pass the LAST row of the
@@ -344,28 +371,21 @@ object SearchIndex {
       .flatMap(t => an.normText(t).split(" ").filter(_.nonEmpty))
       .distinct
     require(terms.nonEmpty, "bm25 query terms analyze to nothing")
-    // route terms to buckets with the ENGINE's own hash expression, so
-    // build- and serve-side bucketing can never drift
-    val termBuckets = spark.createDataFrame(terms.map(Tuple1(_))).toDF("term")
-      .select(tbucket(nb)).distinct().collect().map(_.getInt(0))
+    val bucketOf = terms.map(t => t -> tbucketOf(t, nb)).toMap
+    val buckets = terms.map(bucketOf).distinct.sorted
+    val (nDocs, sumDl) = heldStats(spark, dir)
+    val dfs = heldDfs(spark, dir, terms, bucketOf)
 
-    val post = spark.read.parquet(s"$dir/postings")
-      .filter(col("tbucket").isin(termBuckets.map(c => c: Any): _*)) // pruned
+    val post = TouchedLeaves.read(spark, s"$dir/postings", "tbucket", buckets,
+        PostingsSchema)
+      .getOrElse(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), PostingsSchema))
       .filter(col("term").isin(terms: _*))
       // a compaction crash between append and delete legally leaves
       // rows duplicated (IndexCompaction's write-then-delete window);
       // df/tf are NOT duplicate-tolerant (idf is non-linear in df), so
       // the serve path re-establishes uniqueness on the pruned read
       .dropDuplicates("term", "doc_id")
-
-    // per-term document frequencies (≤ |terms| rows) pivoted wide
-    val dfs = post.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .agg(terms.map(t =>
-        coalesce(sum(when(col("term") === t, col("df"))), lit(0L))
-          .cast("double").as(s"df_$t")).head,
-        terms.map(t =>
-          coalesce(sum(when(col("term") === t, col("df"))), lit(0L))
-            .cast("double").as(s"df_$t")).tail: _*)
 
     // per-doc term frequencies; dl rides along (denormalized)
     val perDoc = post.groupBy(col("doc_id"), col("dl"))
@@ -376,19 +396,19 @@ object SearchIndex {
           coalesce(sum(when(col("term") === t, col("tf"))), lit(0L))
             .cast("double").as(s"tf_$t")).tail: _*)
 
-    val stats = spark.read.parquet(s"$dir/stats")
-      .select(col("n_docs").cast("double").as("n_docs"),
-        (col("sum_dl").cast("double") / col("n_docs")).as("avgdl"))
-
+    // the stats row's division, as the engine does it (null on an
+    // empty index, where no posting is scored anyway)
+    val avgdl = if (nDocs == 0) lit(null).cast("double")
+      else lit(sumDl.toDouble / nDocs.toDouble)
     // q44's exact expression, term by term in the same order
     val perTerm = terms.map { t =>
       val tf = col(s"tf_$t")
-      val df = col(s"df_$t")
-      val idf = log((col("n_docs") - df + 0.5) / (df + 0.5) + 1.0)
+      val df = lit(dfs(t).toDouble)
+      val idf = log((lit(nDocs.toDouble) - df + 0.5) / (df + 0.5) + 1.0)
       idf * (tf * (k1 + 1.0)) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / avgdl))
     }
-    val ranked = perDoc.crossJoin(broadcast(stats)).crossJoin(broadcast(dfs))
+    val ranked = perDoc
       .withColumn("score", round(perTerm.reduce(_ + _), 6))
       .filter(col("score") > 0.0)
       .select(col("doc_id"), col("score"))
@@ -400,5 +420,57 @@ object SearchIndex {
     paged
       .orderBy(col("score").desc, col("doc_id"))
       .limit(topK)
+  }
+
+  /** The postings and stats layouts' fixed schemas: serving reads them
+    * by path with these, so no read infers a schema (one Spark job
+    * each).
+    */
+  private val PostingsSchema = StructType(Seq(StructField("term", StringType),
+    StructField("doc_id", LongType), StructField("dl", LongType),
+    StructField("tf", LongType), StructField("tbucket", IntegerType)))
+  private val StatsSchema = StructType(Seq(StructField("n_docs", LongType),
+    StructField("sum_dl", LongType)))
+
+  /** The stats row (n_docs, sum_dl), held keyed on the files of
+    * `stats/` — every merge rewrites them, so a merge always misses.
+    */
+  private def heldStats(spark: SparkSession, dir: String): (Long, Long) = {
+    val stats = s"$dir/stats"
+    ServingState(stats, "", ArtifactCache.freshnessToken(spark, stats)) {
+      val r = spark.read.schema(StatsSchema).parquet(stats).head()
+      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+    }
+  }
+
+  /** Each term's document frequency: its distinct doc ids in its
+    * `tbucket=` leaf (duplicates a compaction crash left count once),
+    * held per (leaf, term) keyed on the leaf's files. The terms the
+    * state lacks are counted by one collect over their leaves; a term
+    * absent from its leaf, or whose leaf is absent, has df 0.
+    */
+  private def heldDfs(spark: SparkSession, dir: String, terms: Seq[String],
+      bucketOf: Map[String, Int]): Map[String, Long] = {
+    val post = s"$dir/postings"
+    val fs = fsOf(spark, dir)
+    val leafOf = bucketOf.values.toSeq.distinct.map { bk =>
+      val leaf = TouchedLeaves.leaf(post, "tbucket", bk)
+      bk -> (leaf.toString, ArtifactCache.freshnessToken(fs, leaf))
+    }.toMap
+    def keyOf(t: String) = leafOf(bucketOf(t))
+    val held = terms.flatMap(t =>
+      ServingState.get[Long](keyOf(t)._1, t, keyOf(t)._2).map(t -> _)).toMap
+    val missing = terms.filterNot(held.contains)
+    val counted = if (missing.isEmpty) Map.empty[String, Long] else {
+      val got = TouchedLeaves.read(spark, post, "tbucket",
+          missing.map(bucketOf).distinct, PostingsSchema)
+        .fold(Map.empty[String, Long])(_.filter(col("term").isin(missing: _*))
+          .dropDuplicates("term", "doc_id")
+          .groupBy(col("term")).count()
+          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+      missing.map(t => t -> got.getOrElse(t, 0L)).toMap
+    }
+    counted.foreach { case (t, n) => ServingState.put(keyOf(t)._1, t, keyOf(t)._2, n) }
+    held ++ counted
   }
 }

@@ -2,9 +2,8 @@ package graft.operators
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.sources.VersionPointer
+import graft.sources.{TouchedLeaves, VersionPointer}
 
 /** VERSIONED IVF serving store with point-in-time pins (r16, VERDICT
   * r15 #5) — the [[graft.etl.IndexAlias]] / [[graft.streaming.TablePit]]
@@ -129,17 +128,28 @@ object IvfAlias {
     }
   }
 
-  /** Read `clusters` through the map — each cluster from its hosting
-    * version's directory, the partition value re-attached (path
+  /** The [[IvfIndex.Layout]] of the map at centroids version
+    * `centVer`: the centroids of `v<centVer>` and the layout schema, read
+    * off the lowest hosted cluster (every version's rows share it).
+    * Version directories are immutable, so it is held until a retrain
+    * writes new centroids; the store holds one entry, that of the
+    * centroids version last served.
+    */
+  private def layout(spark: SparkSession, root: String, centVer: Int,
+      cmap: Map[Int, Int]): IvfIndex.Layout =
+    IvfIndex.heldLayout(spark, root, s"$root/v$centVer/centroids",
+      cmap.toSeq.sorted.headOption.map { case (c, hv) => (s"$root/v$hv/data", c) })
+
+  /** Read `clusters` through the map — each from its hosting version's
+    * `data/`, by explicit leaf path with the layout schema (path
     * enumeration IS the pruning: nothing outside these directories is
-    * ever listed).
+    * ever listed, and no read infers a schema).
     */
   private def readClusters(spark: SparkSession, root: String,
-      cmap: Map[Int, Int], clusters: Seq[Int]): Option[DataFrame] =
-    clusters.sorted.flatMap { c =>
-      cmap.get(c).map(hv =>
-        spark.read.parquet(s"$root/v$hv/data/cluster=$c")
-          .withColumn("cluster", lit(c)))
+      cmap: Map[Int, Int], lay: IvfIndex.Layout, clusters: Seq[Int]): Option[DataFrame] =
+    clusters.filter(cmap.contains).groupBy(cmap).toSeq.sortBy(_._1).flatMap {
+      case (hv, cs) => TouchedLeaves.read(spark, s"$root/v$hv/data", "cluster",
+        cs.sorted, lay.schema)
     }.reduceOption(_.unionByName(_))
 
   /** Merge a CDC batch into the store — the [[IvfIndex.mergeCdcBatch]]
@@ -152,8 +162,9 @@ object IvfAlias {
   def merge(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, embCol: String, actionCol: String = "_action"): Int = {
     val (centVer, cmap) = readMap(spark, root, activeVersion(spark, root))
-    IvfIndex.mergeBatch(spark, root, s"$root/v$centVer/centroids",
-        readClusters(spark, root, cmap, _), batch, idCol, embCol, actionCol) {
+    val lay = layout(spark, root, centVer, cmap)
+    IvfIndex.mergeBatch(spark, root, lay.centroids,
+        readClusters(spark, root, cmap, lay, _), batch, idCol, embCol, actionCol) {
       (touched, rows) =>
         val n = nextVersion(spark, root)
         if (touched.nonEmpty)
@@ -183,31 +194,16 @@ object IvfAlias {
       idCol: String, embCol: String, p: IvfIndex.Params = IvfIndex.Params(),
       pit: Option[Pit] = None, filter: Option[Column] = None,
       maxQueries: Int = 4096): DataFrame = {
-    import spark.implicits._
     val (centVer, cmap) = pit match {
       case Some(pt) => (pt.centroidsVersion, pt.clusterMap)
       case None => readMap(spark, root, activeVersion(spark, root))
     }
-    val cents = IvfIndex.centroids(spark, s"$root/v$centVer/centroids")
-    val qs = AnnTopK.boundedQueryCollect(
-      IvfIndex.unitVectors(queries, idCol, embCol, lit(true))
-        .map(t => (t._1, t._2)).take(maxQueries + 1),
-      maxQueries)
-    val probes: Array[Array[Int]] = qs.map { case (_, qx) =>
-      cents.indices.toArray
-        .sortBy(c => (-IvfIndex.dot(qx, cents(c)), c)).take(p.nprobe)
-    }
-    val probed = probes.flatten.distinct.sorted.filter(cmap.contains)
-    val corpus = readClusters(spark, root, cmap, probed) match {
-      case None => spark.emptyDataset[(Long, Array[Double], Int)]
-      case Some(df) => df
-        .transform(d => filter.fold(d)(d.filter))
-        .dropDuplicates("id")
-        .select(col("id").cast("long"), col("unit_vec"),
-          col("cluster").cast("int"))
-        .as[(Long, Array[Double], Int)]
-    }
-    IvfIndex.probeTopK(corpus, qs, probes, p)
+    val lay = layout(spark, root, centVer, cmap)
+    val (qs, probes) = IvfIndex.probe(queries, idCol, embCol, lay.centroids,
+      p.nprobe, maxQueries)
+    IvfIndex.serveProbes(spark,
+      readClusters(spark, root, cmap, lay, probes.flatten.distinct.sorted.toSeq),
+      filter, qs, probes, p)
   }
 
   /** Pin the active map for a pagination session (see

@@ -792,9 +792,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
                           s"${stepOpt.getOrElse(strOpt(hm, "calendar_interval")
                             .getOrElse("day"))}|$offUs|${tb.hashCode}|" +
                           planFreshness(dated)
-                      val cached = ltBoundsCache.get(cacheKey)
-                      if (cached != null) cached
-                      else {
+                      ltBoundsCache.get(cacheKey).getOrElse {
                         val um0 = unix_micros(col(f))
                         val ltCol = stepOpt match {
                           case Some(us) =>
@@ -2860,52 +2858,42 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
     * bucket-cap guarantee. Values are UTC LocalDateTimes (None = the
     * hit set has no non-NULL date).
     */
-  // Size-capped, access-ordered LRU: the key carries a source-
-  // freshness fingerprint, so a continuously-appending table mints a
-  // NEW entry per CDC epoch and an unbounded map would leak driver
-  // memory on a long-lived serving JVM. 1024 live (plan, field,
-  // freshness) spans ≈ 100 KB and comfortably covers a serving
-  // session's hot request set; evicted entries just re-derive (one
-  // min/max aggregate) on next touch.
+  // A BoundedLru: the key carries a source-freshness fingerprint, so a
+  // continuously-appending table mints a NEW entry per CDC epoch and an
+  // unbounded map would leak driver memory on a long-lived serving JVM.
+  // 1024 live (plan, field, freshness) spans ≈ 100 KB and comfortably
+  // covers a serving session's hot request set; evicted entries just
+  // re-derive (one min/max aggregate) on next touch.
   private[search] val dateSpanCacheCap = 1024
-  private[search] val dateSpanCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[
-        String, Option[(java.time.LocalDateTime, java.time.LocalDateTime)]](
-        64, 0.75f, true) {
-      override def removeEldestEntry(e: java.util.Map.Entry[
-          String, Option[(java.time.LocalDateTime, java.time.LocalDateTime)]])
-          : Boolean = size() > dateSpanCacheCap
-    })
+  private[search] val dateSpanCache = new graft.sources.BoundedLru[
+    String, Option[(java.time.LocalDateTime, java.time.LocalDateTime)]](dateSpanCacheCap)
 
-  private[search] def dateSpanCacheSize: Int = dateSpanCache.size()
+  private[search] def dateSpanCacheSize: Int = dateSpanCache.size
 
   /** Twin cache for the dense-series LOCAL-boundary bounds (the
     * min/max of the compiled lTrunc expression a varying-offset
     * `min_doc_count: 0` request aggregates): keyed by (hit-plan,
     * field, step, offset knob, resolved transition table, source
-    * freshness), same LRU cap and same compute-outside-the-lock
-    * doctrine as [[dateSpanCache]] — a dashboard refreshing the same
-    * dense request must not pay the bounds scan per request.
+    * freshness), same cap and same compute-outside-the-lock doctrine
+    * as [[dateSpanCache]] — a dashboard refreshing the same dense
+    * request must not pay the bounds scan per request.
     */
-  private[search] val ltBoundsCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[(Long, Long)]](64, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[(Long, Long)]]): Boolean =
-        size() > dateSpanCacheCap
-    })
+  private[search] val ltBoundsCache =
+    new graft.sources.BoundedLru[String, Option[(Long, Long)]](dateSpanCacheCap)
 
   /** Test hook: seed a cache entry directly (the eviction spec needs
     * many distinct keys without paying a corpus scan per key).
     */
   private[search] def dateSpanCachePut(key: String): Unit = {
-    dateSpanCache.put(key, None); ()
+    dateSpanCache.put(key, None)
   }
 
   /** Driver-side freshness fingerprint of every file source feeding a
-    * plan — [[graft.sources.ArtifactCache.freshnessToken]] (entry
-    * count + newest mtime + total bytes, one listing RPC per root, no
-    * Spark job) over each scan's root paths. In-memory relations
-    * contribute nothing (they are immutable per plan by construction).
+    * plan — [[graft.sources.ArtifactCache.freshnessToken]] (a digest
+    * of the names, sizes and mtimes of the root's listing, one listing
+    * RPC per root, no Spark job) over each scan's root paths.
+    * In-memory relations contribute nothing (they are immutable per
+    * plan by construction).
     */
   private[search] def planFreshness(df: DataFrame): String = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -2940,9 +2928,7 @@ private[search] trait QueryDslAggs { this: QueryDsl.type =>
     // concurrent-serving fan-in. Two identical requests racing the
     // same cold key may both compute (benign: same value, last put
     // wins); a lock held across a Spark job is the real hazard.
-    val cached = dateSpanCache.get(key)
-    if (cached != null) cached
-    else {
+    dateSpanCache.get(key).getOrElse {
       val r = dated.agg(min(col(f)), max(col(f))).head()
       val v =
         if (r.isNullAt(0)) None

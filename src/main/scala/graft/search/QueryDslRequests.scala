@@ -1242,14 +1242,16 @@ private[search] trait QueryDslRequests { this: QueryDsl.type =>
       val filterPred = m.get("filter").map(compileQuery(_).pred)
       val spark = table.sparkSession
       import spark.implicits._
+      // the layout's dims, payloads and schema come from its held
+      // serving state (loaded once per layout version), so the checks
+      // below run no Spark job
+      val layout = graft.operators.IvfIndex.layout(spark, path)
       // the layout's dimension is authoritative: a shorter query
       // vector would silently dot only its own prefix (the kernels
       // loop over the query's length), a longer one would crash in
       // the executor — both must fail loud HERE, like the exact arm's
       // per-row dimension raise
-      val layoutDims = spark.read.parquet(s"$path/centroids")
-        .select(col("centroid")).as[Array[Double]]
-        .head().length
+      val layoutDims = layout.dims
       if (qv.size != layoutDims)
         fail(s"knn query_vector has ${qv.size} dims but the index at " +
           s"'$path' holds $layoutDims-dim vectors")
@@ -1263,8 +1265,7 @@ private[search] trait QueryDslRequests { this: QueryDsl.type =>
       // mode) exists. The filter must reference only columns the
       // layout carries — fail loud, never silently fall back to the
       // corpus scan this arm exists to avoid.
-      val payloads = graft.operators.IvfIndex
-        .layoutPayloadCols(table.sparkSession, path)
+      val payloads = layout.payloadCols
       if (filterPred.isDefined && payloads.nonEmpty) {
         if (im.contains("oversample"))
           fail("knn index oversample does not apply to a payload-carrying " +
@@ -1274,8 +1275,8 @@ private[search] trait QueryDslRequests { this: QueryDsl.type =>
         // analysis): a reference the layout does not carry must fail
         // with the layout's payload inventory, not a deep-plan
         // resolution error at collect time
-        try spark.read.parquet(s"$path/data").filter(filterPred.get)
-          .queryExecution.analyzed
+        try spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+            layout.schema).filter(filterPred.get).queryExecution.analyzed
         catch {
           case e: org.apache.spark.sql.AnalysisException =>
             fail(s"knn filter references a column the index layout at " +

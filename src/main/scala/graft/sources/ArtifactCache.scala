@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Build-once-per-JVM temp artifacts (serving indexes, clustered
@@ -19,21 +20,28 @@ object ArtifactCache {
 
   private val cache = new ConcurrentHashMap[String, String]()
 
-  /** Cheap input fingerprint: entry count, newest modification time
-    * and total byte size of the path's direct listing — any rewrite of
-    * a parquet dataset changes at least one of them. One RPC per
+  /** Cheap input fingerprint — the one "has this directory changed"
+    * key of graft (artifact and DSL caches, [[ServingState]]): a digest
+    * of the name, byte size and modification time of every entry of
+    * the path's direct listing, "absent" when it does not exist. Every
+    * Spark write names its files anew, so any rewrite of a parquet
+    * dataset or of one of its leaves changes it. One listing per
     * lookup; never reads data.
     */
-  def freshnessToken(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def freshnessToken(spark: SparkSession, path: String): String =
+    freshnessToken(VersionPointer.fsOf(path, spark.sparkContext.hadoopConfiguration),
+      new Path(path))
+
+  def freshnessToken(fs: FileSystem, p: Path): String =
     if (!fs.exists(p)) "absent"
     else {
-      val ss = fs.listStatus(p)
-      val mtime = if (ss.isEmpty) 0L else ss.map(_.getModificationTime).max
-      s"${ss.length}:$mtime:${ss.map(_.getLen).sum}"
+      val md = java.security.MessageDigest.getInstance("SHA-256")
+      fs.listStatus(p).sortBy(_.getPath.getName).foreach { s =>
+        md.update(s"${s.getPath.getName}\u0000${s.getLen}\u0000${s.getModificationTime}\n"
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      md.digest().map(b => f"$b%02x").mkString
     }
-  }
 
   /** The directory holding the artifact for (`key`, current state of
     * `watch`), building it on first request. `build` receives the

@@ -1,12 +1,15 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
 
-/** The touched-leaf rewrite every in-place index layout merges a CDC
-  * batch through — [[graft.etl.SearchIndex]]'s `postings/tbucket=` and
-  * `docs/dbucket=`, [[graft.operators.IvfIndex]]'s `data/cluster=`. The
+/** The `k=v` leaf convention of the partitioned index layouts —
+  * [[graft.etl.SearchIndex]]'s `postings/tbucket=` and `docs/dbucket=`,
+  * [[graft.operators.IvfIndex]]'s `data/cluster=`: the touched-leaf
+  * rewrite every in-place layout merges a CDC batch through, and the
+  * explicit-leaf read every serve path probes through. The
   * reference's stream indexes, updates or deletes one document at a
   * time (custom_resource.py:324-384); here a batch rewrites the `k=v`
   * leaves its documents live in, and no other leaf is read or written.
@@ -16,6 +19,38 @@ import org.apache.spark.sql.functions.col
   * rows and converges.
   */
 object TouchedLeaves {
+
+  /** The `partCol=<v>` leaf of `path`. */
+  def leaf(path: String, partCol: String, v: Any): Path = new Path(s"$path/$partCol=$v")
+
+  /** The values of the `partCol=<v>` leaves present under `path`. */
+  def values(spark: SparkSession, path: String, partCol: String): Seq[String] = {
+    val fs = VersionPointer.fsOf(path, spark.sparkContext.hadoopConfiguration)
+    val p = new Path(path)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.collect {
+      case s if s.isDirectory && s.getPath.getName.startsWith(s"$partCol=") =>
+        s.getPath.getName.stripPrefix(s"$partCol=")
+    }
+  }
+
+  /** The rows of the `partCol=<v>` leaves of `path` for `values`, read
+    * by explicit path with the layout's `schema` (`partCol` included,
+    * taken from the leaf names under `basePath`): no other leaf is
+    * listed and no schema is inferred, so building the read runs no
+    * Spark job. The scan keeps `partCol IN values` as its partition
+    * filter, so the plan names the leaves it reads. Absent leaves are
+    * skipped; None when none of them exists.
+    */
+  def read(spark: SparkSession, path: String, partCol: String,
+      values: Seq[Any], schema: StructType): Option[DataFrame] = {
+    val fs = VersionPointer.fsOf(path, spark.sparkContext.hadoopConfiguration)
+    val present = values.distinct.filter(v => fs.exists(leaf(path, partCol, v)))
+    if (present.isEmpty) None
+    else Some(spark.read.schema(schema).option("basePath", path)
+      .parquet(present.map(leaf(path, partCol, _).toString): _*)
+      .filter(col(partCol).isin(present: _*)))
+  }
 
   /** Overwrite exactly the `touched` leaves `partCol=<v>` under `path`
     * with `rows`, whose `partCol` values must lie in `touched`. With
@@ -39,8 +74,8 @@ object TouchedLeaves {
       val fs = VersionPointer.fsOf(path,
         repl.sparkSession.sparkContext.hadoopConfiguration)
       touched.map(_.toString).filterNot(still).foreach { v =>
-        val leaf = new Path(s"$path/$partCol=$v")
-        if (fs.exists(leaf)) fs.delete(leaf, true)
+        val l = leaf(path, partCol, v)
+        if (fs.exists(l)) fs.delete(l, true)
       }
     } finally repl.unpersist()
   }

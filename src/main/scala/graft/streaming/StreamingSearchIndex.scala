@@ -124,7 +124,11 @@ object StreamingSearchIndex {
 
   /** Start the stream-maintained BM25 index: every micro-batch of
     * (id, text, action[, _seq]) rows merges in place;
-    * [[SearchIndex.bm25]] serves from the live layout at any time.
+    * [[SearchIndex.bm25]] serves from the live layout at any time. Its
+    * driver-held stats and document frequencies are keyed on the files
+    * of the leaves they were read from, and an epoch's rewrite names
+    * its files anew, so the first request after an epoch reloads what
+    * the epoch changed and nothing else.
     */
   def startText(cdc: DataFrame, idCol: String, textCol: String,
       dir: String, checkpoint: String, actionCol: String = "_action",
@@ -166,7 +170,10 @@ object StreamingSearchIndex {
 
   /** Start the stream-maintained IVF index: micro-batches of
     * (id, embedding, action[, _seq]) rows; [[IvfIndex.topKFromIndex]]
-    * serves from the live layout at any time.
+    * serves from the live layout at any time. Epochs keep the
+    * centroids, so its driver-held centroids and schema stay valid
+    * across them; only a retrain ([[IvfIndex.writeIndex]]) reloads
+    * them.
     */
   def startVectors(cdc: DataFrame, idCol: String, embCol: String,
       dir: String, checkpoint: String, actionCol: String = "_action",

@@ -385,6 +385,154 @@ class SearchIndexSpec extends SparkSpec {
     }
     docs.unpersist()
   }
+
+  private def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+  private def rows(df: DataFrame) = df.as[(Long, Double)].collect().toSeq
+
+  test("a repeat bm25 request over an unchanged index runs at most 3 jobs") {
+    val docs = Tables.load(spark, sf(), "documents")
+    val dir = tmp("bm25jobs")
+    SearchIndex.build(docs, "doc_id", "text", dir)
+    val body = """{"query": {"match": {"text": {"query": "spark join window",
+      "similarity": "bm25"}}}, "size": 20}"""
+    val first = rows(graft.search.QueryDsl.searchIndexed(spark, dir, body))
+    var again: Seq[(Long, Double)] = Nil
+    val jobs = org.apache.spark.graftspec.JobCount.of(spark) {
+      again = rows(graft.search.QueryDsl.searchIndexed(spark, dir, body))
+    }
+    assert(jobs <= 3, s"a repeat request ran $jobs jobs")
+    assert(again === first && again === direct(docs))
+  }
+
+  test("the first bm25 request after a CDC merge reloads only what the merge changed") {
+    val docs = Tables.load(spark, sf(), "documents")
+    val dir = tmp("bm25cold")
+    SearchIndex.build(docs, "doc_id", "text", dir)
+    val body = """{"query": {"match": {"text": {"query": "spark join window",
+      "similarity": "bm25"}}}, "size": 20}"""
+    rows(graft.search.QueryDsl.searchIndexed(spark, dir, body))
+    SearchIndex.mergeCdcBatch(spark, dir,
+      Seq((1L, "spark join window", "upsert")).toDF("doc_id", "text", "_action"),
+      "doc_id", "text")
+    // the stats row and the three terms' dfs miss (the merge rewrote
+    // stats/ and the routed leaves): a stats read (1 job) and a df
+    // collect (3) on top of the plan's own 3, still well under the 13
+    // jobs a request ran before the state was held
+    var cold: Seq[(Long, Double)] = Nil
+    val jobs = org.apache.spark.graftspec.JobCount.of(spark) {
+      cold = rows(graft.search.QueryDsl.searchIndexed(spark, dir, body))
+    }
+    assert(jobs <= 7, s"the first request after a merge ran $jobs jobs")
+    val live = docs.select(col("doc_id").cast("long"), col("text"))
+      .filter(col("doc_id") =!= 1L)
+      .unionByName(Seq((1L, "spark join window")).toDF("doc_id", "text"))
+    assert(cold === direct(live))
+  }
+
+  test("the driver-routed term bucket equals pmod(hash(term), nb) run by a Spark job") {
+    // the bench's 97-word vocabulary, plus non-ASCII and empty terms
+    val vocab = (0 until 97).map(i => s"w$i") ++
+      Seq("é", "naïve", "straße", "Ωmega", "日本語", "😀", "a b", "")
+    Seq(1, 7, 64, 97).foreach { nb =>
+      // repartitioned, so the expression runs in a task, not folded on
+      // the driver
+      val viaJob = vocab.toDF("term").repartition(2)
+        .select(col("term"), pmod(hash(col("term")), lit(nb)))
+        .as[(String, Int)].collect().toMap
+      vocab.foreach(t => assert(SearchIndex.tbucketOf(t, nb) === viaJob(t),
+        s"term '$t' at $nb buckets"))
+    }
+  }
+
+  test("a serve after a CDC merge sees the merged index: rows equal a rebuild, deleted ids gone") {
+    val docs = Tables.load(spark, sf(), "documents").persist()
+    val dir = tmp("bm25stale_merge")
+    SearchIndex.build(docs.filter(col("doc_id") < 400), "doc_id", "text", dir)
+    val before = rows(SearchIndex.bm25(spark, dir, terms))
+    val gone = before.take(3).map(_._1)
+    val batch = docs.filter(col("doc_id") >= 400 && col("doc_id") < 450)
+      .select(col("doc_id"), col("text"), lit("upsert").as("_action"))
+      .unionByName(gone.map(i => (i, null: String, "delete"))
+        .toDF("doc_id", "text", "_action"))
+    SearchIndex.mergeCdcBatch(spark, dir, batch, "doc_id", "text")
+    val live = docs.filter(col("doc_id") < 450 && !col("doc_id").isin(gone: _*))
+    val rebuilt = tmp("bm25stale_merge_re")
+    SearchIndex.build(live, "doc_id", "text", rebuilt)
+    val after = rows(SearchIndex.bm25(spark, dir, terms))
+    assert(after === rows(SearchIndex.bm25(spark, rebuilt, terms)))
+    assert(after === direct(live))
+    assert(!after.exists(r => gone.contains(r._1)), "a deleted id was served")
+    docs.unpersist()
+  }
+
+  test("a serve after a crash-duplicated file and its compaction returns the same rows") {
+    val docs = Tables.load(spark, sf(), "documents")
+    val dir = tmp("bm25stale_compact")
+    SearchIndex.build(docs, "doc_id", "text", dir)
+    val before = rows(SearchIndex.bm25(spark, dir, terms))
+    // the state of a compaction that stopped between its append and
+    // its delete: one routed leaf holds every row twice
+    val leaf = java.nio.file.Paths.get(dir, "postings",
+      s"tbucket=${SearchIndex.tbucketOf("spark", 64)}")
+    val part = java.nio.file.Files.list(leaf).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).head
+    java.nio.file.Files.copy(part, leaf.resolve("part-99999-dup.snappy.parquet"))
+    assert(rows(SearchIndex.bm25(spark, dir, terms)) === before,
+      "a duplicated file must not inflate df or tf")
+    assert(graft.streaming.IndexCompaction.compact(spark, s"$dir/postings", maxFiles = 1)(
+      _.dropDuplicates("term", "doc_id")) === Seq(leaf.getFileName.toString))
+    assert(rows(SearchIndex.bm25(spark, dir, terms)) === before)
+  }
+
+  test("a serve after a rebuild in the same dir sees its bucket count and analyzer") {
+    val docs = Tables.load(spark, sf(), "documents").persist()
+    val dir = tmp("bm25stale_rebuild")
+    SearchIndex.build(docs.filter(col("doc_id") < 300), "doc_id", "text", dir)
+    assert(rows(SearchIndex.bm25(spark, dir, terms)) ===
+      direct(docs.filter(col("doc_id") < 300)))
+    val body = docs.withColumn("body", upper(col("text")))
+    SearchIndex.build(body, "doc_id", "body", dir, buckets = 16, analyzer = "standard")
+    val fresh = tmp("bm25stale_rebuild_re")
+    SearchIndex.build(body, "doc_id", "body", fresh, buckets = 16, analyzer = "standard")
+    val after = rows(SearchIndex.bm25(spark, dir, Seq("SPARK", "join", "Window")))
+    assert(after.nonEmpty &&
+      after === rows(SearchIndex.bm25(spark, fresh, Seq("SPARK", "join", "Window"))))
+    docs.unpersist()
+  }
+
+  test("a serve through an alias follows its swap") {
+    val docs = Tables.load(spark, sf(), "documents").persist()
+    val alias = tmp("bm25stale_alias")
+    IndexAlias.reindex(docs.filter(col("doc_id") < 200), "doc_id", "text", alias)
+    assert(rows(IndexAlias.bm25(spark, alias, terms, k = 20)) ===
+      direct(docs.filter(col("doc_id") < 200)))
+    IndexAlias.reindex(docs, "doc_id", "text", alias)
+    assert(rows(IndexAlias.bm25(spark, alias, terms, k = 20)) === direct(docs))
+    docs.unpersist()
+  }
+
+  test("the held serving state stays within its cap over many merges and many indexes") {
+    import graft.sources.ServingState
+    // merges of one index replace its held entries, never add to them
+    val corpus = (1L to 40L).map(i => (i, s"spark join w${i % 7}")).toDF("doc_id", "text")
+    val dir = tmp("bm25cap")
+    SearchIndex.build(corpus, "doc_id", "text", dir)
+    val q = Seq("spark", "join", "w1", "w2")
+    rows(SearchIndex.bm25(spark, dir, q))
+    val held = ServingState.size
+    (1 to 3).foreach { i =>
+      SearchIndex.mergeCdcBatch(spark, dir,
+        Seq((i.toLong, s"spark w$i", "upsert")).toDF("doc_id", "text", "_action"),
+        "doc_id", "text")
+      rows(SearchIndex.bm25(spark, dir, q))
+      assert(ServingState.size === held, s"merge $i grew the held state")
+    }
+    // many indexes: the LRU cap bounds the entries
+    (0 until ServingState.cap + 50).foreach(i =>
+      ServingState.put(s"/cap-spec/index-$i", "", "0", 0L))
+    assert(ServingState.size <= ServingState.cap,
+      s"held state grew past the cap (${ServingState.size})")
+  }
 }
 
 /** The local filesystem under the `blockcreate` scheme. Inside

@@ -100,4 +100,22 @@ class IvfAliasSpec extends SparkSpec {
       IvfAlias.merge(spark, root, bad, "vec_id", "embedding"))
     assert(e.getMessage.contains("payload column 'label'"), e.getMessage)
   }
+
+  test("a topK's job count does not grow with nprobe") {
+    val emb = Tables.load(spark, sf(), "embeddings")
+    val root = java.nio.file.Files.createTempDirectory("ivf_alias_jobs").toString
+    IvfAlias.build(emb.filter(col("vec_id") < 400), "vec_id", "embedding", p, root)
+    IvfAlias.merge(spark, root, emb.filter(col("vec_id").between(400, 450))
+      .select(col("vec_id"), col("embedding"), lit("upsert").as("_action")),
+      "vec_id", "embedding")
+    val q = Seq((-1L, Array.tabulate(64)(i => ((i * 5) % 9 - 4) / 8.0f)))
+      .toDF("q_id", "q_emb")
+    def jobs(nprobe: Int) = org.apache.spark.graftspec.JobCount.of(spark)(
+      IvfAlias.topK(spark, root, q, "q_id", "q_emb", p.copy(nprobe = nprobe))
+        .collect(): Unit)
+    jobs(1) // loads the store's serving state
+    val one = jobs(1)
+    val all = jobs(p.nlist)
+    assert(all <= one, s"nprobe ${p.nlist} ran $all jobs, nprobe 1 ran $one")
+  }
 }

@@ -126,7 +126,7 @@ class IvfCdcMergeSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf_payload_cdc").toString
     IvfIndex.writeIndex(emb.filter(col("vec_id") < 400), "vec_id", "embedding",
       p, dir, payloadCols = Seq("label"))
-    assert(IvfIndex.layoutPayloadCols(spark, dir) === Seq("label"))
+    assert(IvfIndex.layout(spark, dir).payloadCols === Seq("label"))
 
     // upsert new ids with labels + replace one id's label
     val batch = emb.filter(col("vec_id").between(400, 450))
@@ -176,5 +176,90 @@ class IvfCdcMergeSpec extends SparkSpec {
         .as[Long].collect().sorted.toSeq ===
         emb.select(col("vec_id").cast("long")).as[Long].collect().sorted.toSeq)
     }
+  }
+
+  private def knnQuery(seed: Int) = {
+    val r = new scala.util.Random(seed)
+    Seq((-1L, Array.fill(64)(r.nextFloat() - 0.5f))).toDF("q_id", "q_emb")
+  }
+
+  test("a repeat knn request over an unchanged layout runs at most 5 jobs") {
+    val emb = Tables.load(spark, sf(), "embeddings")
+    val p = IvfIndex.Params(nlist = 16, nprobe = 4, iters = 2, k = 5)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_jobs").toString
+    IvfIndex.writeIndex(emb, "vec_id", "embedding", p, dir)
+    val first = IvfIndex.topKFromIndex(spark, dir, knnQuery(1), "q_id", "q_emb", p)
+      .collect().toSeq
+    var again: Seq[org.apache.spark.sql.Row] = Nil
+    val jobs = org.apache.spark.graftspec.JobCount.of(spark) {
+      again = IvfIndex.topKFromIndex(spark, dir, knnQuery(1), "q_id", "q_emb", p)
+        .collect().toSeq
+    }
+    assert(jobs <= 5, s"a repeat request ran $jobs jobs")
+    assert(again === first && first.size === 5)
+  }
+
+  test("a query vector of ints or longs serves the rows of its float form") {
+    val emb = Tables.load(spark, sf(), "embeddings")
+    val p = IvfIndex.Params(nlist = 8, nprobe = 3, iters = 2, k = 5)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_int_query").toString
+    IvfIndex.writeIndex(emb, "vec_id", "embedding", p, dir)
+    val v = Array.tabulate(64)(i => (i * 7) % 13 - 6)
+    def serve(q: DataFrame) =
+      IvfIndex.topKFromIndex(spark, dir, q, "q_id", "q_emb", p).collect().toSeq
+    val asFloat = serve(Seq((-1L, v.map(_.toFloat))).toDF("q_id", "q_emb"))
+    assert(asFloat.size === 5)
+    assert(serve(Seq((-1L, v)).toDF("q_id", "q_emb")) === asFloat)
+    assert(serve(Seq((-1L, v.map(_.toLong))).toDF("q_id", "q_emb")) === asFloat)
+  }
+
+  test("a serve after a CDC merge sees the merged layout; deleted ids are gone") {
+    val emb = Tables.load(spark, sf(), "embeddings")
+    val p = IvfIndex.Params(nlist = 8, nprobe = 8, iters = 2, k = 5)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_stale_merge").toString
+    IvfIndex.writeIndex(emb.filter(col("vec_id") < 400), "vec_id", "embedding", p, dir)
+    val before = IvfIndex.topKFromIndex(spark, dir, knnQuery(2), "q_id", "q_emb", p)
+      .collect().map(_.getAs[Long]("neighbor_id")).toSeq
+    val batch = before.map(i => (i, null: Array[Float], "delete"))
+      .toDF("vec_id", "embedding", "_action")
+      .unionByName(emb.filter(col("vec_id").between(400, 450))
+        .select(col("vec_id"), col("embedding"), lit("upsert").as("_action")))
+    IvfIndex.mergeCdcBatch(spark, dir, batch, "vec_id", "embedding")
+    val after = IvfIndex.topKFromIndex(spark, dir, knnQuery(2), "q_id", "q_emb", p)
+      .collect().toSeq
+    assert(after.nonEmpty && !after.exists(r => before.contains(r.getAs[Long]("neighbor_id"))),
+      "a deleted id was served")
+    // a byte copy of the merged layout, in a directory no serve has held
+    // state for, serves the same rows
+    val copy = java.nio.file.Files.createTempDirectory("ivf_stale_copy").resolve("idx")
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(dir), copy.toFile)
+    assert(IvfIndex.topKFromIndex(spark, copy.toString, knnQuery(2), "q_id", "q_emb", p)
+      .collect().toSeq === after)
+  }
+
+  test("a rebuild that adds a payload column is seen by the next DSL knn filter") {
+    import graft.search.QueryDsl
+    val emb = Tables.load(spark, sf(), "embeddings")
+    val p = IvfIndex.Params(nlist = 8, nprobe = 8, iters = 2, k = 5)
+    val dir = java.nio.file.Files.createTempDirectory("ivf_stale_payload").toString
+    IvfIndex.writeIndex(emb, "vec_id", "embedding", p, dir)
+    val vec = (0 until 64).map(i => ((i * 7) % 13 - 6) / 10.0).mkString(",")
+    def knn(index: String) = QueryDsl.search(emb,
+      s"""{"knn": {"field": "embedding", "id_field": "vec_id",
+           "query_vector": [$vec], "k": 5,
+           "filter": {"range": {"label": {"lte": 4}}},
+           "index": {"path": "$dir"$index}}}""")
+    // payload-free: the filter is served by over-fetch, oversample allowed
+    assert(knn(""", "oversample": 8""").collect().nonEmpty)
+    assert(IvfIndex.layout(spark, dir).payloadCols === Nil)
+
+    IvfIndex.writeIndex(emb, "vec_id", "embedding", p, dir, payloadCols = Seq("label"))
+    assert(IvfIndex.layout(spark, dir).payloadCols === Seq("label"))
+    // the filter now compiles into the layout scan, so oversample is refused
+    val e = intercept[IllegalArgumentException](knn(""", "oversample": 8""").collect())
+    assert(e.getMessage.contains("no over-fetch window"), e.getMessage)
+    val served = knn("").collect().toSeq
+    val ok = emb.filter(col("label") <= 4).select("vec_id").as[Long].collect().toSet
+    assert(served.nonEmpty && served.forall(r => ok(r.getLong(0))))
   }
 }
