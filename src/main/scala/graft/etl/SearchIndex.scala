@@ -7,6 +7,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
 import graft.sources.{ArtifactCache, ServingState, TouchedLeaves}
+import graft.streaming.IndexCompaction
 
 /** Materialized full-text (BM25) search index — the persisted artifact
   * the reference pipeline's OpenSearch sink actually maintains (every
@@ -154,9 +155,6 @@ object SearchIndex {
     new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def hasParquetData(spark: SparkSession, p: String): Boolean =
-    graft.streaming.IndexCompaction.hasDataFiles(spark, p)
-
   /** True iff a [[build]] ran to its final step at `dir`. The right
     * bootstrap-vs-merge discriminator for stream drivers: postings/ is
     * written FIRST, so its presence only proves a build STARTED — a
@@ -166,13 +164,13 @@ object SearchIndex {
     * last step (and [[recoverStatsIfMissing]] can rebuild everything
     * else from it), so meta presence means "merge is safe" — and so
     * does a populated stats/, the pre-meta layout generation
-    * ([[readBuckets]]'s documented fallback): a legacy complete index
+    * ([[readMeta]]'s documented fallback): a legacy complete index
     * must take the merge path, never be mistaken for a half-build and
     * overwritten by one batch's upserts.
     */
   private[graft] def isInitialized(spark: SparkSession, dir: String): Boolean =
     fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(metaPath(dir))) ||
-      hasParquetData(spark, s"$dir/stats")
+      IndexCompaction.hasDataFiles(spark, s"$dir/stats")
 
   /** Write-once sidecar holding the layout parameters everything else
     * derives from: line 1 = `buckets`, line 2 = analyzer name (absent
@@ -207,34 +205,36 @@ object SearchIndex {
     }
   }
 
-  /** Bucket count: the write-once meta file, falling back to the stats
-    * row for indexes built before the meta file existed.
+  /** The layout parameters, from one read of the meta file: the bucket
+    * count, falling back to the stats row for indexes built before the
+    * meta file existed; and the analyzer the index was built with —
+    * every later touch (merge, serve) must tokenize identically.
+    * Pre-analyzer meta files (one line) and pre-meta layouts mean
+    * whitespace, the only contract that existed then.
     */
-  private def readBuckets(spark: SparkSession, dir: String): Int =
+  private def readMeta(spark: SparkSession, dir: String): (Int, Analyzer) =
     readMetaLines(spark, dir) match {
-      case Some(lines) => lines.head.toInt
-      case None => spark.read.parquet(s"$dir/stats")
-        .select(col("buckets")).head().getInt(0)
+      case Some(lines) => (lines.head.toInt,
+        Analyzer.of(lines.drop(1).headOption.filter(_.nonEmpty).getOrElse("whitespace")))
+      case None => (spark.read.parquet(s"$dir/stats")
+        .select(col("buckets")).head().getInt(0), Analyzer.of("whitespace"))
     }
-
-  /** The analyzer the index was built with — every later touch (merge,
-    * serve) must tokenize identically. Pre-analyzer meta files (one
-    * line) and pre-meta layouts mean whitespace, the only contract
-    * that existed then.
-    */
-  private[graft] def readAnalyzer(spark: SparkSession, dir: String): Analyzer =
-    Analyzer.of(readMetaLines(spark, dir)
-      .flatMap(_.drop(1).headOption.filter(_.nonEmpty))
-      .getOrElse("whitespace"))
 
   /** Replay repair: `stats/` is recomputable state (two longs over
     * `docs/`), so if a crash between its delete and rename lost it,
     * rebuild it instead of failing every later merge and query.
+    * Returns the listing of `stats/` as it stands after the check — the
+    * one listing a serve keys its held stats row on.
     */
-  private def recoverStatsIfMissing(spark: SparkSession, dir: String): Unit =
-    if (!hasParquetData(spark, s"$dir/stats"))
-      writeStats(spark, dir, readBuckets(spark, dir),
-        readAnalyzer(spark, dir).name)
+  private def recoverStatsIfMissing(spark: SparkSession, dir: String, nb: Int,
+      an: Analyzer): Array[org.apache.hadoop.fs.FileStatus] = {
+    val stats = IndexCompaction.listing(spark, s"$dir/stats")
+    if (IndexCompaction.hasData(stats)) stats
+    else {
+      writeStats(spark, dir, nb, an.name)
+      IndexCompaction.listing(spark, s"$dir/stats")
+    }
+  }
 
   /** Stats rewrite with a crash-survivable protocol: write the new row
     * to a temp dir, delete the old `stats/`, rename temp into place.
@@ -280,9 +280,8 @@ object SearchIndex {
     */
   def mergeCdcBatch(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, actionCol: String = "_action"): Unit = {
-    recoverStatsIfMissing(spark, dir)
-    val nb = readBuckets(spark, dir)
-    val an = readAnalyzer(spark, dir) // the build's tokenization, always
+    val (nb, an) = readMeta(spark, dir) // the build's tokenization, always
+    recoverStatsIfMissing(spark, dir, nb, an)
     val ids = batch.select(col(idCol).cast("long").as("doc_id"))
 
     val newPost = postingsOf(
@@ -361,19 +360,18 @@ object SearchIndex {
       k1: Double = 1.2, b: Double = 0.75, topK: Int = 20,
       after: Option[(Double, Long)] = None): DataFrame = {
     require(rawTerms.nonEmpty, "bm25 needs at least one query term")
-    recoverStatsIfMissing(spark, dir)
-    val nb = readBuckets(spark, dir)
     // query terms go through the INDEX's analyzer (an analyzed term
     // may split into several tokens); first-occurrence order is kept
     // so the per-term float-op order stays deterministic
-    val an = readAnalyzer(spark, dir)
+    val (nb, an) = readMeta(spark, dir)
+    val stats = recoverStatsIfMissing(spark, dir, nb, an)
     val terms = rawTerms
       .flatMap(t => an.normText(t).split(" ").filter(_.nonEmpty))
       .distinct
     require(terms.nonEmpty, "bm25 query terms analyze to nothing")
     val bucketOf = terms.map(t => t -> tbucketOf(t, nb)).toMap
     val buckets = terms.map(bucketOf).distinct.sorted
-    val (nDocs, sumDl) = heldStats(spark, dir)
+    val (nDocs, sumDl) = heldStats(spark, dir, stats)
     val dfs = heldDfs(spark, dir, terms, bucketOf)
 
     val post = TouchedLeaves.read(spark, s"$dir/postings", "tbucket", buckets,
@@ -432,12 +430,13 @@ object SearchIndex {
   private val StatsSchema = StructType(Seq(StructField("n_docs", LongType),
     StructField("sum_dl", LongType)))
 
-  /** The stats row (n_docs, sum_dl), held keyed on the files of
-    * `stats/` — every merge rewrites them, so a merge always misses.
+  /** The stats row (n_docs, sum_dl), held keyed on `listing`, the files
+    * of `stats/` — every merge rewrites them, so a merge always misses.
     */
-  private def heldStats(spark: SparkSession, dir: String): (Long, Long) = {
+  private def heldStats(spark: SparkSession, dir: String,
+      listing: Array[org.apache.hadoop.fs.FileStatus]): (Long, Long) = {
     val stats = s"$dir/stats"
-    ServingState(stats, "", ArtifactCache.freshnessToken(spark, stats)) {
+    ServingState(stats, "", ArtifactCache.freshnessToken(listing)) {
       val r = spark.read.schema(StatsSchema).parquet(stats).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }

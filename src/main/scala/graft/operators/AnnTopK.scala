@@ -1,58 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
-
-/** Bounded top-k accumulator ordered by (sim desc, id asc), worst
-  * entry at the heap root — the per-query state the ANN partition
-  * kernels ([[AnnTopK]], [[SignIvf]], [[IvfIndex]]) keep while
-  * scanning a partition. Primitive arrays only; zero allocation per
-  * push.
-  */
-private[operators] final class BoundedTopK(k: Int) {
-  private val sims = new Array[Double](k)
-  private val ids = new Array[Long](k)
-  private var len = 0
-
-  @inline private def worse(s1: Double, i1: Long, s2: Double, i2: Long): Boolean =
-    s1 < s2 || (s1 == s2 && i1 > i2)
-
-  def push(sim: Double, id: Long): Unit = {
-    if (len < k) {
-      var i = len; len += 1
-      sims(i) = sim; ids(i) = id
-      while (i > 0 && worse(sims(i), ids(i), sims((i - 1) / 2), ids((i - 1) / 2))) {
-        val p = (i - 1) / 2
-        val ts = sims(i); val ti = ids(i)
-        sims(i) = sims(p); ids(i) = ids(p); sims(p) = ts; ids(p) = ti
-        i = p
-      }
-    } else if (worse(sims(0), ids(0), sim, id)) {
-      sims(0) = sim; ids(0) = id
-      var i = 0
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1; val r = l + 1
-        var m = i
-        if (l < len && worse(sims(l), ids(l), sims(m), ids(m))) m = l
-        if (r < len && worse(sims(r), ids(r), sims(m), ids(m))) m = r
-        if (m == i) done = true
-        else {
-          val ts = sims(i); val ti = ids(i)
-          sims(i) = sims(m); ids(i) = ids(m); sims(m) = ts; ids(m) = ti
-          i = m
-        }
-      }
-    }
-  }
-
-  /** Unordered (id, sim) entries currently held. */
-  def entries: Iterator[(Long, Double)] =
-    (0 until len).iterator.map(i => (ids(i), sims(i)))
-}
 
 /** Exact brute-force cosine top-k for a small query set against an
   * arbitrarily large corpus — the exact ANN baseline (`q75`) and the
@@ -63,8 +14,8 @@ private[operators] final class BoundedTopK(k: Int) {
   * set — definitionally the small side, it is what a user "searches
   * with" — is collected and broadcast. Each partition keeps one
   * bounded top-k heap per query, so only `partitions × |Q| × k` rows
-  * leave the scan; the final global top-k is a window over that tiny
-  * set.
+  * leave the scan ([[BoundedTopK.scan]]); the final global top-k ranks
+  * that tiny set in one reducer ([[BoundedTopK.ranked]]).
   *
   * The per-pair math runs in a primitive-array kernel rather than the
   * declarative `aggregate(zip_with(...))` form: Spark interprets
@@ -110,62 +61,54 @@ object AnnTopK {
     val spark = e.sparkSession
     import spark.implicits._
 
-    val quant = e.select(
-      col(idCol).cast("long").as("id"),
-      VectorFns.quantize(col(embCol)).as("q"),
-      queryPred.as("is_q"))
-    val corpus = quant.select(col("id"), col("q")).as[(Long, Array[Long])]
-    // query side: small by contract — broadcast it, enforce the contract
-    val queries = AnnTopK.boundedQueryCollect(
-      quant.filter(col("is_q"))
-        .select(col("id"), col("q")).as[(Long, Array[Long])]
-        .take(maxQueries + 1),
-      maxQueries)
-    val bc = spark.sparkContext.broadcast(queries)
+    val quant = quantized(e, idCol, embCol, queryPred)
+    BoundedTopK.ranked(BoundedTopK.scan(
+        quant.select(col("id"), lit(0), col("q")).as[(Long, Int, Array[Long])],
+        queryRows(quant, maxQueries), None, k)(cosine), k)
+  }
 
-    val partials = corpus.mapPartitions { rows =>
-      val qs = bc.value
-      val nq = qs.length
-      if (nq == 0 || !rows.hasNext) Iterator.empty
-      else {
-        val qNorm = new Array[Double](nq)
-        var qi = 0
-        while (qi < nq) {
-          val v = qs(qi)._2
-          var s = 0L; var d = 0
-          while (d < v.length) { s += v(d) * v(d); d += 1 }
-          qNorm(qi) = math.sqrt(s.toDouble)
-          qi += 1
-        }
-        val heaps = Array.fill(nq)(new BoundedTopK(k))
+  /** (id, q = the 1e-7-quantized vector, is_q = `queryPred`) rows: the
+    * encoding of the exact kernels ([[bruteForce]], [[SignIvf]],
+    * [[SignPq]]).
+    */
+  private[operators] def quantized(e: DataFrame, idCol: String, embCol: String,
+      queryPred: Column): DataFrame =
+    e.select(col(idCol).cast("long").as("id"),
+      VectorFns.quantize(col(embCol)).as("q"), queryPred.as("is_q"))
 
-        rows.foreach { case (cid, cv) =>
-          var s = 0L; var d = 0
-          while (d < cv.length) { s += cv(d) * cv(d); d += 1 }
-          val cNorm = math.sqrt(s.toDouble)
-          var q = 0
-          while (q < nq) {
-            if (qs(q)._1 != cid) {
-              val qv = qs(q)._2
-              var dot = 0L; var i = 0
-              while (i < qv.length) { dot += qv(i) * cv(i); i += 1 }
-              heaps(q).push(dot.toDouble / (qNorm(q) * cNorm), cid)
-            }
-            q += 1
-          }
-        }
+  /** The query rows of a [[quantized]] frame, collected under the
+    * `maxQueries` contract ([[boundedQueryCollect]]).
+    */
+  private[operators] def queryRows(quant: DataFrame,
+      maxQueries: Int): Array[(Long, Array[Long])] = {
+    import quant.sparkSession.implicits._
+    boundedQueryCollect(quant.filter(col("is_q"))
+      .select(col("id"), col("q")).as[(Long, Array[Long])]
+      .take(maxQueries + 1), maxQueries)
+  }
 
-        (0 until nq).iterator.flatMap { q =>
-          heaps(q).entries.map { case (id, sim) => (qs(q)._1, id, sim) }
-        }
+  @inline private def norm(v: Array[Long]): Double = {
+    var s = 0L; var d = 0
+    while (d < v.length) { s += v(d) * v(d); d += 1 }
+    math.sqrt(s.toDouble)
+  }
+
+  /** Exact cosine over quantized vectors: integer dot product and
+    * squared norms, then `dot / (sqrt(|q|²)·sqrt(|c|²))` in the oracle's
+    * op order. The score of [[bruteForce]] and [[SignIvf]].
+    */
+  private[operators] def cosine(qs: Array[(Long, Array[Long])]): Scorer[Array[Long]] =
+    new Scorer[Array[Long]] {
+      private val qNorm = qs.map(q => norm(q._2))
+      private var cNorm = 0.0
+      override def accept(bucket: Int, cv: Array[Long]): Boolean = {
+        cNorm = norm(cv); true
+      }
+      def score(qi: Int, cv: Array[Long]): Double = {
+        val qv = qs(qi)._2
+        var dot = 0L; var i = 0
+        while (i < qv.length) { dot += qv(i) * cv(i); i += 1 }
+        dot.toDouble / (qNorm(qi) * cNorm)
       }
     }
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    partials.toDF("q_id", "neighbor_id", "sim")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
-  }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.{ArtifactCache, ServingState, TouchedLeaves}
@@ -383,11 +382,15 @@ object IvfIndex {
         .take(maxQueries + 1)
         .map(r => (r.getLong(0), unitize(r.getSeq[Float](1)))),
       maxQueries)
-    val probes = qs.map { case (_, qx) =>
-      cents.indices.toArray.sortBy(c => (-dot(qx, cents(c)), c)).take(nprobe)
-    }
-    (qs, probes)
+    (qs, qs.map { case (_, qx) => probeSet(qx, cents, nprobe) })
   }
+
+  /** The `n` centroids nearest `qx` (max dot, tie → lower cid): a
+    * query's probe set.
+    */
+  private[operators] def probeSet(qx: Array[Double], cents: Array[Array[Double]],
+      n: Int): Array[Int] =
+    cents.indices.toArray.sortBy(c => (-dot(qx, cents(c)), c)).take(n)
 
   /** [[probeTopK]] over the probed clusters' rows `probed` (None: the
     * layout holds none of them), pre-filtered by `filter` and deduped
@@ -400,7 +403,7 @@ object IvfIndex {
       p: Params): DataFrame = {
     import spark.implicits._
     val corpus = probed match {
-      case None => spark.emptyDataset[(Long, Array[Double], Int)]
+      case None => spark.emptyDataset[(Long, Int, Array[Double])]
       case Some(df) => df
         // PRE-FILTER on the pruned scan (r16, VERDICT r15 #1): a filter
         // over the layout's payload columns drops candidates BEFORE the
@@ -413,8 +416,8 @@ object IvfIndex {
         // delete window); a duplicate candidate would occupy two top-k
         // slots, so serving re-establishes id uniqueness on the pruned read
         .dropDuplicates("id")
-        .select(col("id").cast("long"), col("unit_vec"), col("cluster").cast("int"))
-        .as[(Long, Array[Double], Int)]
+        .select(col("id").cast("long"), col("cluster").cast("int"), col("unit_vec"))
+        .as[(Long, Int, Array[Double])]
     }
     probeTopK(corpus, qs, probes, p)
   }
@@ -440,53 +443,18 @@ object IvfIndex {
       probes.flatten.distinct.sorted.toSeq, lay.schema), filter, qs, probes, p)
   }
 
-  /** The one probe-scoring core every layout server runs (direct and
-    * versioned): broadcast (query, probe-set) pairs, per-query bounded
-    * heaps over a corpus already pruned to the probed clusters.
+  /** The one probe-scoring core of the trained IVF ([[topK]]) and of
+    * every layout server (direct and versioned): (id, cluster, unit
+    * vector) rows scored by dot product against the queries probing
+    * their cluster, ranked by [[BoundedTopK]].
     */
-  private[operators] def probeTopK(corpus: Dataset[(Long, Array[Double], Int)],
+  private[operators] def probeTopK(corpus: Dataset[(Long, Int, Array[Double])],
       qs: Array[(Long, Array[Double])], probes: Array[Array[Int]],
-      p: Params): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast((qs, probes))
-
-    val partials = corpus.mapPartitions { rows =>
-      val (q, pr) = bc.value
-      val nq = q.length
-      if (nq == 0 || !rows.hasNext) Iterator.empty
-      else {
-        val byBucket: Map[Int, Array[Int]] =
-          pr.zipWithIndex
-            .flatMap { case (ps, i) => ps.map(_ -> i) }
-            .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-        val heaps = Array.fill(nq)(new BoundedTopK(p.k))
-        rows.foreach { case (cid, cx, cluster) =>
-          byBucket.get(cluster) match {
-            case None =>
-            case Some(qIdx) =>
-              var x = 0
-              while (x < qIdx.length) {
-                val qi = qIdx(x)
-                if (q(qi)._1 != cid) heaps(qi).push(dot(q(qi)._2, cx), cid)
-                x += 1
-              }
-          }
-        }
-        (0 until nq).iterator.flatMap { qi =>
-          heaps(qi).entries.map { case (id, sim) => (q(qi)._1, id, sim) }
-        }
-      }
-    }
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    partials.toDF("q_id", "neighbor_id", "sim")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= p.k)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
-  }
+      p: Params): DataFrame =
+    BoundedTopK.ranked(BoundedTopK.scan(corpus, qs, Some(probes), p.k)(q =>
+      new Scorer[Array[Double]] {
+        def score(qi: Int, cx: Array[Double]): Double = dot(q(qi)._2, cx)
+      }), p.k)
 
   /** Train and expose the (id, cluster) assignment — the layout step
     * behind [[writeIndex]], exposed for callers managing their own
@@ -524,51 +492,11 @@ object IvfIndex {
       val queries: Array[(Long, Array[Double])] = AnnTopK.boundedQueryCollect(
         v.filter(_._3).map(t => (t._1, t._2)).take(maxQueries + 1),
         maxQueries)
-      val probes: Array[Array[Int]] = queries.map { case (_, qx) =>
-        cents.indices.toArray
-          .sortBy(c => (-dot(qx, cents(c)), c)).take(p.nprobe)
-      }
-      val bc = spark.sparkContext.broadcast((cents, queries, probes))
-
-      val partials = v.mapPartitions { rows =>
-        val (cs, qs, pr) = bc.value
-        val nq = qs.length
-        if (nq == 0 || !rows.hasNext) Iterator.empty
-        else {
-          val byBucket: Map[Int, Array[Int]] =
-            pr.zipWithIndex
-              .flatMap { case (ps, i) => ps.map(_ -> i) }
-              .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-          val heaps = Array.fill(nq)(new BoundedTopK(p.k))
-          rows.foreach { case (cid, cx, _) =>
-            byBucket.get(nearest(cx, cs)) match {
-              case None =>
-              case Some(qIdx) =>
-                var x = 0
-                while (x < qIdx.length) {
-                  val q = qIdx(x)
-                  if (qs(q)._1 != cid)
-                    heaps(q).push(dot(qs(q)._2, cx), cid)
-                  x += 1
-                }
-            }
-          }
-          (0 until nq).iterator.flatMap { q =>
-            heaps(q).entries.map { case (id, sim) => (qs(q)._1, id, sim) }
-          }
-        }
-      }
-
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("sim").desc, col("neighbor_id"))
-      val out = partials.toDF("q_id", "neighbor_id", "sim")
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= p.k)
-        .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
-        .orderBy(col("q_id"), col("rank"))
+      val bc = spark.sparkContext.broadcast(cents)
+      probeTopK(v.map { case (id, x, _) => (id, nearest(x, bc.value), x) },
+          queries, queries.map { case (_, qx) => probeSet(qx, cents, p.nprobe) }, p)
         // materialize before the finally releases the cached parent
         .localCheckpoint(true)
-      out
     } finally v.unpersist()
   }
 }

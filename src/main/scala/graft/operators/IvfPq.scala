@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** IVF-PQ: inverted-file ANN with product-quantized residual codes —
@@ -198,82 +197,53 @@ object IvfPq {
       IvfIndex.unitVectors(queries, idCol, embCol, lit(true))
         .map(t => (t._1, t._2)).take(maxQueries + 1),
       maxQueries)
-    val probes: Array[Array[Int]] = qs.map { case (_, qx) =>
-      model.cents.indices.toArray
-        .sortBy(c => (-IvfIndex.dot(qx, model.cents(c)), c)).take(p.nprobe)
-    }
+    val probes = qs.map { case (_, qx) => IvfIndex.probeSet(qx, model.cents, p.nprobe) }
     val probed = probes.flatten.distinct.sorted
-    val bc = spark.sparkContext.broadcast((model, qs, probes))
+    val bc = spark.sparkContext.broadcast(model)
 
-    val partials = encoded
+    val corpus = encoded
       .filter(col("cluster").isin(probed.map(c => c: Any): _*))
       .select(col("id").cast("long"), col("cluster").cast("int"), col("code"))
       .as[(Long, Int, Array[Byte])]
-      .mapPartitions { rows =>
-        val (Model(cs, bks), q, pr) = bc.value
-        val nq = q.length
-        if (nq == 0 || !rows.hasNext) Iterator.empty
-        else {
-          val m = bks.length; val nc = bks(0).length
-          val sub = cs(0).length / m
-          // LUT(query, cluster): base = q·cent, plus per-(sub, code)
-          // q_sub · codeword — built lazily per cluster seen
-          val luts = Array.fill(nq)(scala.collection.mutable.Map.empty[Int, (Double, Array[Double])])
-          def lut(qi: Int, cluster: Int): (Double, Array[Double]) =
-            luts(qi).getOrElseUpdate(cluster, {
-              val qx = q(qi)._2
-              val base = IvfIndex.dot(qx, cs(cluster))
-              val t = new Array[Double](m * nc)
-              var s = 0
-              while (s < m) {
-                var c = 0
-                while (c < nc) {
-                  val w = bks(s)(c)
-                  var d = 0.0; var i = 0
-                  while (i < sub) { d += qx(s * sub + i) * w(i); i += 1 }
-                  t(s * nc + c) = d
-                  c += 1
-                }
-                s += 1
-              }
-              (base, t)
-            })
-          val byBucket: Map[Int, Array[Int]] =
-            pr.zipWithIndex.flatMap { case (ps, i) => ps.map(_ -> i) }
-              .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-          val heaps = Array.fill(nq)(new BoundedTopK(p.k))
-          rows.foreach { case (cid, cluster, code) =>
-            byBucket.get(cluster) match {
-              case None =>
-              case Some(qIdx) =>
-                var x = 0
-                while (x < qIdx.length) {
-                  val qi = qIdx(x)
-                  if (q(qi)._1 != cid) {
-                    val (base, t) = lut(qi, cluster)
-                    var sim = base
-                    var s = 0
-                    while (s < m) {
-                      sim += t(s * nc + (code(s) & 0xff)); s += 1
-                    }
-                    heaps(qi).push(sim, cid)
-                  }
-                  x += 1
-                }
+    BoundedTopK.ranked(BoundedTopK.scan(corpus, qs, Some(probes), p.k) { q =>
+      val Model(cs, bks) = bc.value
+      val m = bks.length; val nc = bks(0).length
+      val sub = cs(0).length / m
+      // LUT(query, cluster): base = q·cent, plus per-(sub, code)
+      // q_sub · codeword — built lazily per cluster seen
+      val luts = Array.fill(q.length)(scala.collection.mutable.Map.empty[Int, (Double, Array[Double])])
+      def lut(qi: Int, cluster: Int): (Double, Array[Double]) =
+        luts(qi).getOrElseUpdate(cluster, {
+          val qx = q(qi)._2
+          val base = IvfIndex.dot(qx, cs(cluster))
+          val t = new Array[Double](m * nc)
+          var s = 0
+          while (s < m) {
+            var c = 0
+            while (c < nc) {
+              val w = bks(s)(c)
+              var d = 0.0; var i = 0
+              while (i < sub) { d += qx(s * sub + i) * w(i); i += 1 }
+              t(s * nc + c) = d
+              c += 1
             }
+            s += 1
           }
-          (0 until nq).iterator.flatMap { qi =>
-            heaps(qi).entries.map { case (id, sim) => (q(qi)._1, id, sim) }
-          }
+          (base, t)
+        })
+      new Scorer[Array[Byte]] {
+        private var cluster = 0
+        override def accept(bucket: Int, code: Array[Byte]): Boolean = {
+          cluster = bucket; true
+        }
+        def score(qi: Int, code: Array[Byte]): Double = {
+          val (base, t) = lut(qi, cluster)
+          var sim = base
+          var s = 0
+          while (s < m) { sim += t(s * nc + (code(s) & 0xff)); s += 1 }
+          sim
         }
       }
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    partials.toDF("q_id", "neighbor_id", "sim")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= p.k)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
-      .orderBy(col("q_id"), col("rank"))
+    }, p.k)
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Scalar-quantized (int8) brute-force ANN — the memory-bandwidth
@@ -62,52 +61,33 @@ object QuantizedAnn {
       .map { case (id, v, isQ) => (id, quantizeI8(v), isQ) }
     val queries = AnnTopK.boundedQueryCollect(
       quant.filter(_._3).map(r => (r._1, r._2)).take(maxQueries + 1), maxQueries)
-    val bc = spark.sparkContext.broadcast(queries)
 
     // one corpus pass; int dot products; |Q| bounded heaps per partition
-    val partials = quant.map(r => (r._1, r._2)).mapPartitions { rows =>
-      val qs = bc.value
-      val nq = qs.length
-      if (nq == 0 || !rows.hasNext) Iterator.empty
-      else {
-        val qNorm = new Array[Double](nq)
-        var qi = 0
-        while (qi < nq) {
-          val q = qs(qi)._2
-          var s = 0L; var d = 0
-          while (d < q.length) { s += q(d).toLong * q(d); d += 1 }
-          qNorm(qi) = math.sqrt(s.toDouble)
-          qi += 1
-        }
-        val heaps = Array.fill(nq)(new BoundedTopK(k))
-        rows.foreach { case (cid, cv) =>
-          var s = 0L; var d = 0
-          while (d < cv.length) { s += cv(d).toLong * cv(d); d += 1 }
-          val cNorm = math.sqrt(s.toDouble)
-          if (cNorm > 0) {
-            var q = 0
-            while (q < nq) {
-              if (qs(q)._1 != cid) {
-                val qv = qs(q)._2
-                var dot = 0L; var i = 0
-                while (i < qv.length) { dot += qv(i).toLong * cv(i); i += 1 }
-                heaps(q).push(dot.toDouble / (qNorm(q) * cNorm), cid)
-              }
-              q += 1
-            }
-          }
-        }
-        (0 until nq).iterator.flatMap { q =>
-          heaps(q).entries.map { case (id, sim) => (qs(q)._1, id, sim) }
-        }
+    BoundedTopK.ranked(BoundedTopK.scan(quant.map(r => (r._1, 0, r._2)),
+      queries, None, k)(cosine), k)
+  }
+
+  @inline private def norm(v: Array[Byte]): Double = {
+    var s = 0L; var d = 0
+    while (d < v.length) { s += v(d).toLong * v(d); d += 1 }
+    math.sqrt(s.toDouble)
+  }
+
+  /** Exact cosine between int8 codes; an all-zero row has no direction
+    * and is skipped.
+    */
+  private def cosine(qs: Array[(Long, Array[Byte])]): Scorer[Array[Byte]] =
+    new Scorer[Array[Byte]] {
+      private val qNorm = qs.map(q => norm(q._2))
+      private var cNorm = 0.0
+      override def accept(bucket: Int, cv: Array[Byte]): Boolean = {
+        cNorm = norm(cv); cNorm > 0
+      }
+      def score(qi: Int, cv: Array[Byte]): Double = {
+        val qv = qs(qi)._2
+        var dot = 0L; var i = 0
+        while (i < qv.length) { dot += qv(i).toLong * cv(i); i += 1 }
+        dot.toDouble / (qNorm(qi) * cNorm)
       }
     }
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    partials.toDF("q_id", "neighbor_id", "sim")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
-  }
 }

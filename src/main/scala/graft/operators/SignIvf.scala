@@ -1,10 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.functions.VectorFns
 
 /** Inverted-file ANN with an *analytic* coarse quantizer: the vector's
   * dimensions are split into `signDims` contiguous groups and bucket
@@ -32,7 +29,7 @@ import graft.functions.VectorFns
   *
   * Distribution shape: identical to [[AnnTopK]] — one unshuffled
   * corpus scan, broadcast queries (each carrying its probe set), one
-  * bounded heap per query per partition, final top-k window over
+  * bounded heap per query per partition, final top-k ranked over
   * `partitions × |Q| × k` rows. The probe filter just skips rows whose
   * bucket no query probes, which is what makes it sub-brute-force.
   *
@@ -71,6 +68,23 @@ object SignIvf {
     c
   }
 
+  /** Each query's `nprobe` buckets among the `existing` ones, in
+    * multi-probe order: by the alignment of the bucket's sign pattern
+    * with the query's group sums (own bucket first, then the cheapest
+    * flips), ties → lower bucket. Shared with [[SignPq]].
+    */
+  private[operators] def probeSets(queries: Array[(Long, Array[Long])],
+      existing: Array[Int], sd: Int, nprobe: Int): Array[Array[Int]] =
+    queries.map { case (_, qv) =>
+      val gs = groupSums(qv, sd)
+      def align(c: Int): Long = {
+        var s = 0L; var d = 0
+        while (d < sd) { s += (if ((c & (1 << d)) != 0) gs(d) else -gs(d)); d += 1 }
+        s
+      }
+      existing.sortBy(c => (-align(c), c)).take(nprobe)
+    }
+
   def topK(e: DataFrame, idCol: String, embCol: String, queryPred: Column,
       signDims: Int = 4, nprobe: Int = 4, k: Int = 5,
       maxQueries: Int = 4096): DataFrame = {
@@ -81,98 +95,20 @@ object SignIvf {
     // persisted: the existing-buckets collect, the query collect and
     // the scoring scan would otherwise each re-read + re-quantize the
     // corpus (3× the dominant scan cost at scale)
-    val quant = e.select(
-      col(idCol).cast("long").as("id"),
-      VectorFns.quantize(col(embCol)).as("q"),
-      queryPred.as("is_q"))
-      .persist()
-    val corpus = quant.select(col("id"), col("q")).as[(Long, Array[Long])]
-
-    def groupSums(v: Array[Long]): Array[Long] = SignIvf.groupSums(v, sd)
-    def cidOf(v: Array[Long]): Int = SignIvf.cidOf(v, sd)
-
-    // buckets that actually exist in the corpus (tiny: ≤ 2^signDims)
-    val existing: Array[Int] =
-      corpus.map(t => cidOf(t._2)).distinct().collect().sorted
-
-    // queries + their probe sets, computed once and broadcast; the
-    // collect is bounded by the maxQueries contract (fail loud, not OOM)
-    val queries = AnnTopK.boundedQueryCollect(
-      quant.filter(col("is_q"))
-        .select(col("id"), col("q")).as[(Long, Array[Long])]
-        .take(maxQueries + 1),
-      maxQueries)
-    val probesPerQuery: Array[Array[Int]] = queries.map { case (_, qv) =>
-      val gs = groupSums(qv)
-      // multi-probe order: alignment of the bucket's sign pattern with
-      // the query's group sums (own bucket first, then cheapest flips)
-      def align(c: Int): Long = {
-        var s = 0L; var d = 0
-        while (d < sd) { s += (if ((c & (1 << d)) != 0) gs(d) else -gs(d)); d += 1 }
-        s
-      }
-      existing.sortBy(c => (-align(c), c)).take(nprobe)
-    }
-    val bc = spark.sparkContext.broadcast((queries, probesPerQuery))
-
-    val partials = corpus.mapPartitions { rows =>
-      val (qs, probes) = bc.value
-      val nq = qs.length
-      if (nq == 0 || !rows.hasNext) Iterator.empty
-      else {
-        val qNorm = new Array[Double](nq)
-        var qi = 0
-        while (qi < nq) {
-          val v = qs(qi)._2
-          var s = 0L; var d = 0
-          while (d < v.length) { s += v(d) * v(d); d += 1 }
-          qNorm(qi) = math.sqrt(s.toDouble)
-          qi += 1
-        }
-        // bucket → indices of the queries probing it
-        val byBucket: Map[Int, Array[Int]] =
-          probes.zipWithIndex
-            .flatMap { case (ps, i) => ps.map(_ -> i) }
-            .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-        val heaps = Array.fill(nq)(new BoundedTopK(k))
-
-        rows.foreach { case (cid, cv) =>
-          byBucket.get(cidOf(cv)) match {
-            case None => // no query probes this bucket — skip the row
-            case Some(qIdx) =>
-              var s = 0L; var d = 0
-              while (d < cv.length) { s += cv(d) * cv(d); d += 1 }
-              val cNorm = math.sqrt(s.toDouble)
-              var x = 0
-              while (x < qIdx.length) {
-                val q = qIdx(x)
-                if (qs(q)._1 != cid) {
-                  val qv = qs(q)._2
-                  var dot = 0L; var i = 0
-                  while (i < qv.length) { dot += qv(i) * cv(i); i += 1 }
-                  heaps(q).push(dot.toDouble / (qNorm(q) * cNorm), cid)
-                }
-                x += 1
-              }
-          }
-        }
-
-        (0 until nq).iterator.flatMap { q =>
-          heaps(q).entries.map { case (id, sim) => (qs(q)._1, id, sim) }
-        }
-      }
-    }
-
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    val out = partials.toDF("q_id", "neighbor_id", "sim")
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("neighbor_id"), col("sim"))
-      // materialize (tiny: |Q|×k rows) so the corpus cache can be
-      // released before returning
-      .localCheckpoint(true)
-    quant.unpersist()
-    out
+    val quant = AnnTopK.quantized(e, idCol, embCol, queryPred).persist()
+    try {
+      val corpus = quant.select(col("id"), col("q")).as[(Long, Array[Long])]
+        .map { case (id, v) => (id, cidOf(v, sd), v) }
+      // buckets that actually exist in the corpus (tiny: ≤ 2^signDims)
+      val existing: Array[Int] = corpus.map(_._2).distinct().collect().sorted
+      // queries + their probe sets, computed once and broadcast; the
+      // collect is bounded by the maxQueries contract (fail loud, not OOM)
+      val queries = AnnTopK.queryRows(quant, maxQueries)
+      BoundedTopK.ranked(BoundedTopK.scan(corpus, queries,
+          Some(probeSets(queries, existing, sd, nprobe)), k)(AnnTopK.cosine), k)
+        // materialize (tiny: |Q|×k rows) so the corpus cache can be
+        // released before returning
+        .localCheckpoint(true)
+    } finally quant.unpersist()
   }
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns
@@ -39,7 +38,7 @@ import graft.functions.VectorFns
   * Distribution shape: identical to [[SignIvf]]/[[AnnTopK]] — one
   * unshuffled scan of the (tiny) code table, broadcast queries with
   * precomputed probe sets, per-partition bounded heaps, final top-k
-  * window over `partitions × |Q| × k` rows.
+  * ranked over `partitions × |Q| × k` rows.
   */
 object SignPq {
 
@@ -88,109 +87,60 @@ object SignPq {
 
     // persisted: the existing-buckets collect, the query collect and
     // the encoded scan would otherwise each re-read the corpus
-    val quant = e.select(
-        col(idCol).cast("long").as("id"),
-        VectorFns.quantize(col(embCol)).as("q"),
-        queryPred.as("is_q"))
-      .persist()
+    val quant = AnnTopK.quantized(e, idCol, embCol, queryPred).persist()
     try {
       val encoded = quant.select(col("id"), col("q"))
         .as[(Long, Array[Long])]
         .map { case (id, v) => (id, SignIvf.cidOf(v, sd), codesOf(v, M)) }
-
       val existing: Array[Int] =
         encoded.map(_._2).distinct().collect().sorted
-
-      val queries = AnnTopK.boundedQueryCollect(
-        quant.filter(col("is_q"))
-          .select(col("id"), col("q")).as[(Long, Array[Long])]
-          .take(maxQueries + 1),
-        maxQueries)
-      // multi-probe order: identical alignment rule to SignIvf.topK
-      val probesPerQuery: Array[Array[Int]] = queries.map { case (_, qv) =>
-        val gs = SignIvf.groupSums(qv, sd)
-        def align(c: Int): Long = {
-          var s = 0L; var d = 0
-          while (d < sd) { s += (if ((c & (1 << d)) != 0) gs(d) else -gs(d)); d += 1 }
-          s
-        }
-        existing.sortBy(c => (-align(c), c)).take(nprobe)
-      }
-      val bc = spark.sparkContext.broadcast((queries, probesPerQuery))
-
-      val partials = encoded.mapPartitions { rows =>
-        val (qs, probes) = bc.value
-        val nq = qs.length
-        if (nq == 0 || !rows.hasNext) Iterator.empty
-        else {
-          val dims = qs(0)._2.length
-          val sub = dims / M
-          val nc = 1 << sub
-          // per-query ADC lookup tables: lut(qi)(s·nc + c) = exact
-          // integer partial score of code c in subspace s
-          val luts = new Array[Array[Long]](nq)
-          var qi = 0
-          while (qi < nq) {
-            val qv = qs(qi)._2
-            val t = new Array[Long](M * nc)
-            var s = 0
-            while (s < M) {
-              var c = 0
-              while (c < nc) {
-                var acc = 0L; var i = 0
-                while (i < sub) {
-                  val qd = qv(s * sub + i)
-                  acc += (if ((c & (1 << i)) != 0) qd else -qd)
-                  i += 1
-                }
-                t(s * nc + c) = acc
-                c += 1
-              }
-              s += 1
-            }
-            luts(qi) = t
-            qi += 1
-          }
-          val byBucket: Map[Int, Array[Int]] =
-            probes.zipWithIndex
-              .flatMap { case (ps, i) => ps.map(_ -> i) }
-              .groupBy(_._1).map { case (c, xs) => c -> xs.map(_._2) }
-          val heaps = Array.fill(nq)(new BoundedTopK(k))
-
-          rows.foreach { case (cid, cluster, code) =>
-            byBucket.get(cluster) match {
-              case None => // no query probes this bucket — skip the row
-              case Some(qIdx) =>
-                var x = 0
-                while (x < qIdx.length) {
-                  val q = qIdx(x)
-                  if (qs(q)._1 != cid) {
-                    val t = luts(q)
-                    var adc = 0L; var s = 0
-                    while (s < M) { adc += t(s * nc + (code(s) & 0xff)); s += 1 }
-                    // exact: |adc| ≤ dims × 2e7 ≪ 2^53
-                    heaps(q).push(adc.toDouble, cid)
-                  }
-                  x += 1
-                }
-            }
-          }
-          (0 until nq).iterator.flatMap { q =>
-            heaps(q).entries.map { case (id, sim) => (qs(q)._1, id, sim.toLong) }
-          }
-        }
-      }
-
-      val w = Window.partitionBy(col("q_id"))
-        .orderBy(col("adc").desc, col("neighbor_id"))
-      partials.toDF("q_id", "neighbor_id", "adc")
-        .withColumn("rank", row_number().over(w).cast("long"))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("neighbor_id"), col("adc"))
-        .orderBy(col("q_id"), col("rank"))
+      val queries = AnnTopK.queryRows(quant, maxQueries)
+      BoundedTopK.ranked(
+        BoundedTopK.scan(encoded, queries,
+            Some(SignIvf.probeSets(queries, existing, sd, nprobe)), k, "adc")(adc(M))
+          // exact: |adc| ≤ dims × 2e7 ≪ 2^53
+          .withColumn("adc", col("adc").cast("long")),
+        k, "adc")
         // sever before unpersist: the returned plan must not re-trigger
         // the corpus scans the persist was protecting
         .localCheckpoint(true)
     } finally quant.unpersist()
+  }
+
+  /** The ADC score over `m`-byte sign codes: per query an
+    * `m × 2^sub` lookup table, lut(s·nc + c) = the exact integer
+    * partial score of code c in subspace s; a row's score is `m`
+    * byte-indexed adds.
+    */
+  private def adc(m: Int)(qs: Array[(Long, Array[Long])]): Scorer[Array[Byte]] = {
+    val sub = qs(0)._2.length / m
+    val nc = 1 << sub
+    val luts = qs.map { case (_, qv) =>
+      val t = new Array[Long](m * nc)
+      var s = 0
+      while (s < m) {
+        var c = 0
+        while (c < nc) {
+          var acc = 0L; var i = 0
+          while (i < sub) {
+            val qd = qv(s * sub + i)
+            acc += (if ((c & (1 << i)) != 0) qd else -qd)
+            i += 1
+          }
+          t(s * nc + c) = acc
+          c += 1
+        }
+        s += 1
+      }
+      t
+    }
+    new Scorer[Array[Byte]] {
+      def score(qi: Int, code: Array[Byte]): Double = {
+        val t = luts(qi)
+        var adc = 0L; var s = 0
+        while (s < m) { adc += t(s * nc + (code(s) & 0xff)); s += 1 }
+        adc.toDouble
+      }
+    }
   }
 }

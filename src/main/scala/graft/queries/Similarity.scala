@@ -7,8 +7,8 @@ import graft.sources.Tables
 /** Approximate-nearest-neighbor search over the `embeddings` table.
   *
   * q75 is the exact baseline: broadcast the (small) query set against
-  * the full vector table — one map-side pass over the corpus, then a
-  * per-query top-k window. Scales to any corpus size (corpus is never
+  * the full vector table — one map-side pass over the corpus, then the
+  * per-query top-k ranked in one reducer. Scales to any corpus size (corpus is never
   * shuffled; only |queries| × k rows survive).
   *
   * q76 is the IVF scale path: a coarse quantizer (cluster centroids)

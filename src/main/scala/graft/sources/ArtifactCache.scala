@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Build-once-per-JVM temp artifacts (serving indexes, clustered
@@ -33,15 +33,17 @@ object ArtifactCache {
       new Path(path))
 
   def freshnessToken(fs: FileSystem, p: Path): String =
-    if (!fs.exists(p)) "absent"
-    else {
-      val md = java.security.MessageDigest.getInstance("SHA-256")
-      fs.listStatus(p).sortBy(_.getPath.getName).foreach { s =>
-        md.update(s"${s.getPath.getName}\u0000${s.getLen}\u0000${s.getModificationTime}\n"
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      }
-      md.digest().map(b => f"$b%02x").mkString
+    if (!fs.exists(p)) "absent" else freshnessToken(fs.listStatus(p))
+
+  /** The fingerprint of an existing directory's listing, already taken. */
+  def freshnessToken(listing: Array[FileStatus]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    listing.sortBy(_.getPath.getName).foreach { s =>
+      md.update(s"${s.getPath.getName}\u0000${s.getLen}\u0000${s.getModificationTime}\n"
+        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
+    md.digest().map(b => f"$b%02x").mkString
+  }
 
   /** The directory holding the artifact for (`key`, current state of
     * `watch`), building it on first request. `build` receives the

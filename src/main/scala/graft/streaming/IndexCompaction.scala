@@ -54,15 +54,22 @@ object IndexCompaction {
     * over the data-less root throws "Unable to infer schema". Hidden
     * entries (`_tombstones`, `_SUCCESS`, `.crc`) never count as data.
     */
-  private[graft] def hasDataFiles(spark: SparkSession,
-      path: String): Boolean = {
+  private[graft] def hasDataFiles(spark: SparkSession, path: String): Boolean =
+    hasData(listing(spark, path))
+
+  /** The entries of `path`, none when it does not exist. */
+  private[graft] def listing(spark: SparkSession, path: String): Array[FileStatus] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(root) && fs.listStatus(root).exists { s =>
+    if (fs.exists(root)) fs.listStatus(root) else Array.empty
+  }
+
+  /** [[hasDataFiles]] over a listing already taken. */
+  private[graft] def hasData(listing: Array[FileStatus]): Boolean =
+    listing.exists { s =>
       val n = s.getPath.getName
       !n.startsWith("_") && !n.startsWith(".")
     }
-  }
 
   /** Compact `path`'s root and its one-level `k=v` partition leaves.
     * Directories holding ≤ `maxFiles` part files are left untouched

@@ -604,6 +604,19 @@ class PlanAssertSpec extends SparkSpec {
     assert(shuffles.size <= 1, s"knn shuffled the corpus:\n${nodes.head}")
   }
 
+  test("q75 brute-force ANN: the ranked tail plans no range-partitioning exchange") {
+    val nodes = finalNodes(Registry.byName("q75_ann_brute").run(spark, sf()))
+    // the partials meet in one reducer, where the rank window and the
+    // (q_id, rank) sort are local: no range sample, no range exchange
+    val ranged = nodes.collect {
+      case s: ShuffleExchangeExec if s.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning] => s
+    }
+    assert(ranged.isEmpty, s"q75 range-partitions its tail:\n${nodes.head}")
+    assert(nodes.collect { case s: ShuffleExchangeExec => s }.size === 1,
+      s"q75 moves more than its partials:\n${nodes.head}")
+  }
+
   test("q90 shuffle shard: one hash shuffle to shards, window within shard") {
     val nodes = finalNodes(Registry.byName("q90_shuffle_shard").run(spark, sf()))
     val windows = nodes.collect {
