@@ -207,7 +207,7 @@ object IvfIndex {
     */
   private[operators] def heldLayout(spark: SparkSession, root: String,
       centroidsPath: String, leaf: => Option[(String, Int)]): Layout =
-    ServingState(root, "ivf",
+    ServingState(root,
         s"$centroidsPath|${ArtifactCache.freshnessToken(spark, centroidsPath)}") {
       val schema = leaf.fold(new org.apache.spark.sql.types.StructType()) {
         case (data, c) => spark.read.option("basePath", data)

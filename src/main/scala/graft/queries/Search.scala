@@ -1265,8 +1265,9 @@ object Search {
 
     // distance_feature query: boost hits by proximity to an origin —
     // here recency against 2024-01-15 with a 7-day pivot, the decay
-    // OpenSearch computes as pivot/(pivot+distance). Applied on top of
-    // a base relevance (the event's value) as a multiplicative boost.
+    // OpenSearch computes as pivot/(pivot+distance), built by the
+    // facade's own [[graft.GraftEngine.distanceFeature]]. Applied on top
+    // of a base relevance (the event's value) as a multiplicative boost.
     // Determinism: distance is integer epoch seconds, the decay is one
     // IEEE division with identical operand order in both engines,
     // rounded to 6 dp before the multiply (also rounded) — order never
@@ -1279,8 +1280,9 @@ object Search {
         val e = Tables.load(s, dir, "events")
         val originS = 1705276800L // 2024-01-15 00:00:00 UTC
         val pivotS = 604800.0 // 7 days
-        val distS = abs(unix_timestamp(date_trunc("second", col("ts"))) - lit(originS))
-        val boost = round(lit(pivotS) / (lit(pivotS) + distS.cast("double")), 6)
+        val epochS = unix_timestamp(date_trunc("second", col("ts")))
+        val distS = abs(epochS - lit(originS))
+        val boost = graft.GraftEngine(s).distanceFeature(epochS, originS, pivotS)
         e.filter(col("event_type") === "click")
           .withColumn("dist_s", distS)
           .withColumn("boost", boost)

@@ -868,10 +868,11 @@ private[search] trait QueryDslEndpoints { this: QueryDsl.type =>
     * stored analyzer inside [[graft.etl.SearchIndex.bm25]] (build- and
     * serve-side tokenization can never drift), and the scoring replays
     * q44's float-op order bit-for-bit, so this endpoint shares the
-    * q103 oracle family. The stats row and the terms' document
-    * frequencies are held per index version on the driver, and the
-    * plan reads only the postings leaves the terms route to — the
-    * corpus is never scanned (SearchIndexSpec pins it).
+    * q103 oracle family. Each term's document frequency rides on its
+    * posting rows, the stats row is the one entry held per index
+    * version on the driver, and the plan reads only the postings
+    * leaves the terms route to — the corpus is never scanned
+    * (SearchIndexSpec pins it).
     *
     * Request surface: `query.match` (single field — the index carries
     * exactly one analyzed text field, so the field name documents the

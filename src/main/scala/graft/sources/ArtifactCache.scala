@@ -2,7 +2,7 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Build-once-per-JVM temp artifacts (serving indexes, clustered
@@ -28,12 +28,11 @@ object ArtifactCache {
     * dataset or of one of its leaves changes it. One listing per
     * lookup; never reads data.
     */
-  def freshnessToken(spark: SparkSession, path: String): String =
-    freshnessToken(VersionPointer.fsOf(path, spark.sparkContext.hadoopConfiguration),
-      new Path(path))
-
-  def freshnessToken(fs: FileSystem, p: Path): String =
+  def freshnessToken(spark: SparkSession, path: String): String = {
+    val fs = VersionPointer.fsOf(path, spark.sparkContext.hadoopConfiguration)
+    val p = new Path(path)
     if (!fs.exists(p)) "absent" else freshnessToken(fs.listStatus(p))
+  }
 
   /** The fingerprint of an existing directory's listing, already taken. */
   def freshnessToken(listing: Array[FileStatus]): String = {

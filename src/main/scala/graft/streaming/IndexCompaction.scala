@@ -27,8 +27,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * absent. That is tolerated by construction in every store: the
   * accepted corpora feed id anti-joins and ≥-threshold probe joins
   * (duplicates change nothing), the band index feeds a candidate join
-  * that `.distinct()`s before verification, and the index layouts'
-  * serve paths and merges drop duplicate keys. The next compaction
+  * that `.distinct()`s before verification, BM25 serving takes the
+  * `max` of a (doc, term)'s scores — its copies are identical rows,
+  * the term's `df` included — IVF serving drops duplicate ids, and
+  * the merges of both index layouts drop duplicate keys. The next compaction
   * pass then repairs the duplication via the operator's `rewrite`
   * hook (dropDuplicates on the store's key). Single-writer contract:
   * run from the stream's own `foreachBatch` thread (epochs are

@@ -124,11 +124,12 @@ object StreamingSearchIndex {
 
   /** Start the stream-maintained BM25 index: every micro-batch of
     * (id, text, action[, _seq]) rows merges in place;
-    * [[SearchIndex.bm25]] serves from the live layout at any time. Its
-    * driver-held stats and document frequencies are keyed on the files
-    * of the leaves they were read from, and an epoch's rewrite names
-    * its files anew, so the first request after an epoch reloads what
-    * the epoch changed and nothing else.
+    * [[SearchIndex.bm25]] serves from the live layout at any time. Each
+    * term's document frequency rides on its posting rows, rewritten
+    * with the leaf by the epoch's merge; the one driver-held entry per
+    * index version is the stats row, keyed on the files of `stats/`,
+    * so the first request after an epoch rereads that row and nothing
+    * else.
     */
   def startText(cdc: DataFrame, idCol: String, textCol: String,
       dir: String, checkpoint: String, actionCol: String = "_action",

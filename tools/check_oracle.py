@@ -7,6 +7,9 @@ missing or stale) counts as a failure."""
 import sys, json, glob, os
 import duckdb
 
+# progress lines reach a file or a pipe as they are printed
+sys.stdout.reconfigure(line_buffering=True)
+
 sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 out_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
 
